@@ -3,39 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // local-mode scheduling: no locality waits, larger broadcast
-      // threshold so sf0.1 dims broadcast instead of shuffling
-      .config("spark.locality.wait", "0s")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // ContextCleaner starvation fix (r17, guide §5): shuffle files,
-      // broadcasts and RDD state are cleaned only when the DRIVER GC
-      // collects their weak references, and a multi-query session
-      // with an 8 GiB heap can run entire suites without one Full GC
-      // — per-pass b25 samples climbed 6.8 → 21.2 s monotonically as
-      // dead shuffle state piled up, and System.gc() between passes
-      // flipped the curve to monotone-improving. periodicGC.interval
-      // (Spark's intended knob for exactly this; default 30 min) puts
-      // a bounded driver GC inside the run: measured b25 med 12.0 →
-      // 4.2 s, floor 4.7 → 3.7, with the GC pauses PAID inside timed
-      // queries. Env-overridable for A/B.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "15s"))
-      .getOrCreate()
-    // ERROR, not WARN: the query-boundary sweep unpersists
-    // localCheckpointed RDDs, which logs a WARN per frame — hundreds
-    // of stderr lines that could displace the final JSON line from
-    // the driver's bounded output tail.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.envCpus)
     // Untimed warmup: JVM/codegen/parquet-reader init, so the first
     // timed query isn't charged ~5s of session bring-up.
     try {
@@ -54,29 +22,8 @@ object Bench {
     // (local iteration aid; the driver runs the full inventory).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val alpha = SparkEntry.queries.toSeq.sortBy(_._1)
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // SPARK_GRAFT_ORDER=spread interleaves the alphabetical inventory
-    // across 8 strata (indices 0,8,16,…, then 1,9,…) — the r14
-    // experiment for the in-suite-vs-isolated gap. MEASURED WORSE
-    // (260.9 vs 236.5 s median-sum, graph tier 53.5 vs 48.7, §8p):
-    // tier adjacency is page-cache/block LOCALITY (consecutive graph
-    // queries share the persisted graph blocks), not contention —
-    // the default stays alphabetical; the knob stays as the recorded
-    // negative result. Per-query medians are honest either way.
-    // SPARK_GRAFT_ORDER=graphfirst runs the b-tier first (page cache
-    // and graph layout freshest — the r15-verdict #6 experiment);
-    // alphabetical order within each group is preserved so per-query
-    // medians stay comparable.
-    val selected = sys.env.get("SPARK_GRAFT_ORDER") match {
-      case Some("spread") =>
-        (0 until 8).flatMap(r => alpha.indices.collect {
-          case i if i % 8 == r => alpha(i) })
-      case Some("graphfirst") =>
-        alpha.filter(_._1.startsWith("b")) ++
-          alpha.filterNot(_._1.startsWith("b"))
-      case _ => alpha
-    }
     // Per-query warm runs, ROUND-ROBIN: the full suite executes `runs`
     // times (default 3) as interleaved passes — pass 1 runs every query
     // once in order, then pass 2, then pass 3 — and the per-query MEDIAN
@@ -203,8 +150,12 @@ object Bench {
     // prefix, footer or stray log line — prints after the compact JSON
     // (build.sbt routes forked stdout raw and suppresses [success], so
     // this IS the last line of the driver-captured output; the
-    // simulated-tail check lives in tools/check_tail.py).
-    spark.stop()
+    // simulated-tail check lives in tools/check_tail.py). A failing
+    // stop() must not cost the line, so its error goes to stderr.
+    try spark.stop()
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] spark.stop() failed: ${e.getMessage}")
+    }
     println(compact)
   }
 }

@@ -1,11 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
 /** Plan audit: prints the formatted physical plan of selected queries
   * (default: a scan-pushdown, a broadcast join, and the star join) so
-  * pushdown/broadcast/codegen can be eyeballed.
+  * pushdown/broadcast/codegen can be eyeballed, on Bench's session.
   * Usage: runMain graft.Explain [sfDir] [queryName...]
+  *
+  * SPARK_GRAFT_EXPLAIN_EXEC=1 executes each query (noop sink) first and
+  * prints the FINAL adaptive plan with its live SQL metrics (rows,
+  * durations, shuffle bytes, spill) — runtime ReusedExchange / AQE
+  * join demotions and per-operator cost the static explain can't show.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -15,30 +22,39 @@ object Explain {
     // honor SPARK_GRAFT_CPUS (r17): the r16 plan dumps were captured
     // at the default 4, where loop partition sizing clamps to 4 and a
     // 32-core fan-out regression is invisible in the dump.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_EXPLAIN_EXEC=1: execute first, then print the FINAL
-    // adaptive plan — shows runtime ReusedExchange / AQE join demotions
-    // the static explain can't.
+    val spark = GraftSession.local(GraftSession.envCpus)
     val exec = sys.env.get("SPARK_GRAFT_EXPLAIN_EXEC").contains("1")
     names.foreach { n =>
       println(s"\n========== $n ==========")
       val df = SparkEntry.queries(n)(spark, sfDir)
       if (exec) {
-        df.count()
-        println(df.queryExecution.executedPlan.toString)
+        df.write.format("noop").mode("overwrite").save()
+        printMetrics(df.queryExecution.executedPlan, 0)
       } else df.explain("formatted")
     }
     spark.stop()
+  }
+
+  private val shownMetrics = Set("numOutputRows", "duration",
+    "shuffleBytesWritten", "dataSize", "collectTime", "buildTime",
+    "aggTime", "sortTime", "fetchWaitTime", "shuffleWriteTime",
+    "numFiles", "spillSize")
+
+  /** One line per operator with its non-zero shown metrics, descending
+    * into adaptive plans and query stages. */
+  private def printMetrics(p: SparkPlan, depth: Int): Unit = {
+    def fmt(v: Long): String =
+      if (v >= 10000000L) s"${v / 1000000}M" else v.toString
+    val m = p.metrics.collect {
+      case (k, v) if shownMetrics(k) && v.value > 0 => s"$k=${fmt(v.value)}"
+    }.mkString(" ")
+    println("  " * depth + p.nodeName + "  " + m)
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _: ReusedExchangeExec => Seq.empty
+      case _ => p.children
+    }
+    kids.foreach(printMetrics(_, depth + 1))
   }
 }

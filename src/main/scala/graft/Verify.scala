@@ -1,30 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores INT64 TIMESTAMP(NANOS): read as long,
-      // Tables.events normalizes to a microsecond timestamp.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // ContextCleaner starvation fix — see Bench.scala: without
-      // periodic driver GC a 223-query session accumulates dead
-      // shuffle/broadcast state for its whole lifetime.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "15s"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench's session: the oracle checks the plans the bench times
+    val spark = GraftSession.local(GraftSession.envCpus)
     new java.io.File(outDir).mkdirs()
     // local-iteration filter: comma-separated query names; unset (the
     // driver's case) → dump everything

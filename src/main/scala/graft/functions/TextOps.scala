@@ -105,10 +105,9 @@ object TextOps {
     * (h*31 + next) % p combine — long arithmetic instead of per-gram
     * string concatenation, mirrored exactly by the oracle (identical
     * collisions, so identical distinct counts). Native expression
-    * with an O(n) rolling update (GramHashAB: ~2-3x over the
-    * interpreted HOF at w=16 on the sf0.1 corpus); the equivalent
-    * builtin composition is kept as [[ngramHashesHof]]. Guarded for
-    * size < w (empty array). */
+    * with an O(n) rolling update (~2-3x over the interpreted
+    * transform/element_at composition it replaced, at w=16 on the
+    * sf0.1 corpus; SURVEY §8). Guarded for size < w (empty array). */
   def ngramHashes(th: Column, w: Int): Column =
     if (w == 1) th
     else {
@@ -116,19 +115,6 @@ object TextOps {
       ColumnBridge.column(graft.functions.expr.NgramHashes(
         ColumnBridge.expression(th), w))
     }
-
-  /** Builtin-composition variant of [[ngramHashes]] (same values —
-    * GramHashAB pins equality; kept for the A/B and as executable
-    * documentation of the algebra). The input MUST be a bound
-    * attribute, not an expression subtree: higher-order lambdas
-    * re-evaluate embedded subtrees once PER ELEMENT (§8m). */
-  def ngramHashesHof(th: Column, w: Int): Column =
-    if (w == 1) th
-    else when(size(th) >= w,
-      transform(sequence(lit(1), size(th) - (w - 1)), i =>
-        (2 to w).foldLeft(element_at(th, i))((acc, j) =>
-          (acc * 31L + element_at(th, i + j - 1)) % lit(P))))
-      .otherwise(array().cast("array<long>"))
 
   /** Per-token poly hashes of a TEXT column, in token order, in one
     * native pass — same values as transform(tokens(text), polyHash)
@@ -143,9 +129,9 @@ object TextOps {
   }
 
   /** Non-overlapping p-token block hashes over a token-hash array
-    * (trailing partial included) — same values as the
-    * transform+aggregate+slice composition in [[ngramHashesHof]]
-    * style; c85's map-side block fingerprint. */
+    * (trailing partial included) — each block folds
+    * (h*31 + next) % p like [[ngramHashes]]; c85's map-side block
+    * fingerprint. */
   def blockHashes(th: Column, p: Int): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(graft.functions.expr.BlockHashes(

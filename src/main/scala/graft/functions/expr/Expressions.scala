@@ -239,12 +239,12 @@ case class TokenHashes(child: Expression)
 }
 
 /** Rolling w-token window hashes over a token-hash array — identical
-  * values to [[graft.functions.TextOps.ngramHashesHof]]'s per-window
-  * fold (acc*31 + next) % p, computed with the O(n) rolling update
-  * g' = ((g − t_first·31^(w−1))·31 + t_new) mod p instead of the
+  * values to the oracle's per-window fold (acc*31 + next) % p
+  * ([[graft.functions.TextOps.ngramHashesSql]]), computed with the
+  * O(n) rolling update g' = ((g − t_first·31^(w−1))·31 + t_new) mod p instead of the
   * interpreted O(n·w) HOF tree (w element_at calls per window).
-  * Arrays shorter than w yield the empty array, matching the HOF's
-  * guard. Full doGenCode — the rolling loop runs inside
+  * Arrays shorter than w yield the empty array, matching the
+  * oracle's guard. Full doGenCode — the rolling loop runs inside
   * whole-stage codegen. */
 case class NgramHashes(child: Expression, w: Int)
     extends UnaryExpression {

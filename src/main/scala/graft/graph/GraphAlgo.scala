@@ -27,26 +27,14 @@ object GraphAlgo {
     finally spark.conf.set("spark.sql.adaptive.enabled", saved)
   }
 
-  /** Rows per task for the CPU-bound iterative loops below (r16).
-    * AQE's coalescing is BYTE-based (parallelismFirst targets
-    * max(bytes/parallelism, 1 MB)): a graph round's few MB of shuffle
-    * coalesces to ONE partition, serializing the whole round's window
-    * sort / hash build on a single core (measured: every b14 CC round
-    * ran at parts=1 on local[32], 1.1-1.4 s per round of 92.5k
-    * edges). Per-ROW cost is what dominates these rounds, so the loop
-    * partition count derives from the round's row count instead:
-    * ceil(rows / 8k), clamped to the session shuffle parallelism — at
-    * cluster scale rows/8k exceeds the session setting, the clamp
-    * returns the session value, and behavior is unchanged (this is a
-    * size-derived floor on parallelism, not a local[32] constant). */
-  /** Default rows/task for the WINDOW-SORT loop family (CC's
+  /** Rows/task for the WINDOW-SORT loop family (CC's
     * alternating stars, k-core's degree rounds): per-row work is a
     * per-center sort, heavy enough that ~32k-row tasks amortize their
     * scheduling cost (r16 partition sweep on b14's 185k-row rounds:
     * 6 parts = 0.52 s/round, 1 part = 1.1-1.4, 23 parts = 2.3-5.4;
     * re-confirmed r17: b14 at 32768 = 4.35 s vs 5.15 at 131072). */
   private val SortLoopRowsPerTask = 32768L
-  /** Default rows/task for the JOIN/AGG loop family (PageRank, LPA,
+  /** Rows/task for the JOIN/AGG loop family (PageRank, LPA,
     * path centrality, shortest paths): per-row work is a codegen'd
     * hash probe + partial agg — far cheaper per row, so tasks need
     * ~4x more rows before parallelism beats scheduling overhead (r17
@@ -60,20 +48,23 @@ object GraphAlgo {
     * is faster on a quiet box. */
   private val JoinLoopRowsPerTask = 131072L
 
-  private def loopParts(spark: org.apache.spark.sql.SparkSession,
-                        rows: Long, ceiling: Int,
-                        dfltRowsPerTask: Long): Int = {
-    val rowsPerTask = spark.conf
-      .getOption("spark.graft.loop.rowsPerTask")
-      .map { v =>
-        try v.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"spark.graft.loop.rowsPerTask must be a positive long, got '$v'")
-        }
-      }.getOrElse(dfltRowsPerTask)
+  /** Partition count for one round of a CPU-bound iterative loop
+    * (r16). AQE's coalescing is BYTE-based (parallelismFirst targets
+    * max(bytes/parallelism, 1 MB)): a graph round's few MB of shuffle
+    * coalesces to ONE partition, serializing the whole round's window
+    * sort / hash build on a single core (measured: every b14 CC round
+    * ran at parts=1 on local[32], 1.1-1.4 s per round of 92.5k
+    * edges). Per-ROW cost is what dominates these rounds, so the loop
+    * partition count derives from the round's row count instead:
+    * ceil(rows / rowsPerTask), clamped to the session shuffle
+    * parallelism — at cluster scale the quotient exceeds the session
+    * setting, the clamp returns the session value, and behavior is
+    * unchanged (a size-derived floor on parallelism, not a local[32]
+    * constant). */
+  private def loopParts(rows: Long, ceiling: Int,
+                        rowsPerTask: Long): Int =
     math.max(1L, math.min(ceiling.toLong,
       (rows + rowsPerTask - 1) / rowsPerTask)).toInt
-  }
 
   /** Scoped (set/restore, under [[aqeScopeLock]]) shuffle parallelism
     * + AQE byte-coalescing override for an iterative loop's plans and
@@ -86,7 +77,7 @@ object GraphAlgo {
     * the clamp returns the session value and the scope is a no-op —
     * the sizing only bites where data is small relative to width. */
   private def withLoopParts[T](spark: org.apache.spark.sql.SparkSession,
-                               dfltRowsPerTask: Long = SortLoopRowsPerTask)
+                               rowsPerTask: Long = SortLoopRowsPerTask)
       (body: (Long => Unit) => T): T = aqeScopeLock.synchronized {
     val ceiling = spark.sessionState.conf.numShufflePartitions
     val savedP = spark.conf.get("spark.sql.shuffle.partitions",
@@ -97,7 +88,7 @@ object GraphAlgo {
       "false")
     def set(rows: Long): Unit = spark.conf.set(
       "spark.sql.shuffle.partitions",
-      loopParts(spark, rows, ceiling, dfltRowsPerTask).toString)
+      loopParts(rows, ceiling, rowsPerTask).toString)
     try body(set)
     finally {
       spark.conf.set("spark.sql.shuffle.partitions", savedP)
@@ -116,10 +107,6 @@ object GraphAlgo {
                        rows: Long)(body: => T): T =
     withLoopParts(spark, JoinLoopRowsPerTask) { set => set(rows); body }
 
-  /** [[connectedComponents]] with per-round stderr timing (scratch). */
-  def connectedComponentsDebug(edgesIn: DataFrame, maxIter: Int = 20): DataFrame =
-    connectedComponents(edgesIn, maxIter, debug = true)
-
   /** Undirected connected components via alternating large-star /
     * small-star contraction (Kiveris et al., "Connected Components in
     * MapReduce and Beyond", SoCC'14 — public literature; also the
@@ -129,8 +116,7 @@ object GraphAlgo {
     * each is two groupBy+join passes over the current edges. Component
     * id = the smallest member under the id type's ordering. Returns
     * (node, component) for every node incident to an edge. */
-  def connectedComponents(edgesIn: DataFrame, maxIter: Int = 30,
-                          debug: Boolean = false): DataFrame = {
+  def connectedComponents(edgesIn: DataFrame, maxIter: Int = 30): DataFrame = {
     // precondition (r16 advice): with zero rounds the initial
     // orientation is returned un-deduplicated — every caller runs at
     // least one round, which small-star's distinct bounds.
@@ -174,47 +160,29 @@ object GraphAlgo {
     // convergence loop below — so it was rejected.)
     import org.apache.spark.sql.expressions.Window
 
-    // `spark.graft.cc.aggstars=true` swaps both stars' per-center min
-    // from the window shape to groupBy(center).agg(min) + join-back —
-    // same two exchanges per phase (the join's both sides land on the
-    // center key the window would shuffle to anyway), but the min
-    // combines MAP-SIDE and the probe join is AQE-skew-splittable, so
-    // a web-crawl hub with 1e8 neighbors costs one combined row per
-    // map task instead of one sorted WindowExec task. Default stays
-    // windowed: on the max-degree-3k testdata graphs the shapes tie
-    // (CcAB, SURVEY §8l) and the window saves a join operator; the
-    // flag is the documented escape hatch for hub-degree graphs.
-    val aggStars = edgesIn.sparkSession.conf
-      .getOption("spark.graft.cc.aggstars").contains("true")
+    // Both stars take the per-center min with a window. The
+    // groupBy(center).agg(min) + join-back shape (map-side combine,
+    // skew-splittable join) was measured and dropped: on the
+    // max-degree-3k testdata graphs the two tie (SURVEY §8l) and the
+    // window saves a join operator.
     // large-star: around each center c, link every LARGER neighbor to
     // the minimum of N(c) ∪ {c} (keeps orientation, halves path reach)
     def largeStar(E: DataFrame): DataFrame = {
       val bid = E.select(col("u").as("c"), col("v").as("n"))
         .unionAll(E.select(col("v").as("c"), col("u").as("n")))
-      val withMin =
-        if (aggStars)
-          bid.join(bid.groupBy(col("c")).agg(min(col("n")).as("__mn")),
-              Seq("c"))
-            .withColumn("m", least(col("__mn"), col("c")))
-        else bid.withColumn("m",
-          least(min(col("n")).over(Window.partitionBy(col("c"))), col("c")))
-      withMin
+      bid.withColumn("m",
+        least(min(col("n")).over(Window.partitionBy(col("c"))), col("c")))
         .where(col("n") > col("c") && col("n") =!= col("m"))
         .select(col("n").as("u"), col("m").as("v"))
-      // no distinct here: both shapes' mins are duplicate-
-      // insensitive and small-star's distinct bounds the round's
-      // output — saves one shuffle per phase
+      // no distinct here: the window min is duplicate-insensitive and
+      // small-star's distinct bounds the round's output — saves one
+      // shuffle per phase
     }
     // small-star: around each center u (over the oriented edges), link
     // every smaller neighbor and u itself to min(N(u) ∪ {u}) (edges
     // are oriented u>v, so min(N(u) ∪ {u}) = min(v))
     def smallStar(E: DataFrame): DataFrame = {
-      val withMin =
-        if (aggStars)
-          E.join(E.groupBy(col("u")).agg(min(col("v")).as("m")), Seq("u"))
-        else
-          E.withColumn("m", min(col("v")).over(Window.partitionBy(col("u"))))
-      withMin
+      E.withColumn("m", min(col("v")).over(Window.partitionBy(col("u"))))
         .select(explode(array(col("v"), col("u"))).as("n"), col("m"))
         .where(col("n") =!= col("m"))
         .select(greatest(col("n"), col("m")).as("u"),
@@ -233,7 +201,6 @@ object GraphAlgo {
     var curEdges = dir.count()
     withLoopParts(edgesIn.sparkSession) { setParts =>
     while (iter < maxIter && !done) {
-      val t0 = System.nanoTime()
       setParts(2L * curEdges) // bid = both directions of the edge set
       // lazy checkpoint: the convergence agg below is the action that
       // materializes the blocks — one job per round, not two.
@@ -254,9 +221,6 @@ object GraphAlgo {
         sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).first()
       val sig = (row.getLong(0),
         if (row.isNullAt(1)) BigDecimal(0) else BigDecimal(row.getDecimal(1)))
-      if (debug) System.err.println(
-        f"[cc] round $iter: ${(System.nanoTime() - t0) / 1e9}%.2f s, " +
-          f"edges=${sig._1}, parts=${next.rdd.getNumPartitions}")
       done = sig == prev
       prev = sig
       curEdges = sig._1
@@ -561,7 +525,7 @@ object GraphAlgo {
     * `spark.graft.approx.nodesim=true` (opt-in, same contract as
     * `spark.graft.approx.simjoin`): the exact wedge join stays the
     * default and the oracle — MEASURED FASTER at this graph size
-    * (round-8 regenerated sf0.1, tools/NodeSimAB interleaved: exact
+    * (round-8 regenerated sf0.1, interleaved A/B in SURVEY §8: exact
     * 12.7 s vs approx 27.7 s median; 4.5 s after the
     * degree-carrying rewrite below): with
     * bounded degrees the wedge intermediate is D·|E|-flat and the
@@ -577,12 +541,13 @@ object GraphAlgo {
     if (und0.sparkSession.conf
         .getOption("spark.graft.approx.nodesim").contains("true"))
       return nodeSimilarityApproxUnd(und0, maxCenterDeg, topN)
-    // the view feeds three consumers (degrees, both wedge sides):
-    // materialize once so the self-join reuses one exchange instead
-    // of re-scanning the source per reference
-    // r17: no re-barrier of the input (see kCoreUnd — the *Und
-    // contract is a pre-materialized view; the old barrier(true)
-    // copied |E| rows per invocation).
+    // r17: no re-barrier of the input (the old barrier(true) copied
+    // |E| rows per invocation). The view feeds three consumers
+    // (degrees, both wedge sides), so the caller must hand in a
+    // materialized view: `undirected()` barriers it for
+    // [[nodeSimilarity]], `MemoryGraph.undirectedView` reads it at
+    // rest. A lazy input is re-evaluated per consumer — three scans
+    // of its source, plus its distinct, per invocation.
     val und = und0
     val deg = undDegrees(und).barrier(true)
     // the NEIGHBOR's degree rides the adjacency INTO the wedge join
@@ -665,8 +630,8 @@ object GraphAlgo {
     * scores identically to the exact operator; only pairs whose
     * bands never collide can be missed (P(miss) = (1−J²)^bands at
     * r=2 rows/band — 1e-8 at J=0.5, measured 100% top-20 recall in
-    * ApproxNodeSimSpec). See [[nodeSimilarityUnd]] and tools/NodeSimAB
-    * for the measured verdict: at THIS graph's bounded-degree shape
+    * ApproxNodeSimSpec). See [[nodeSimilarityUnd]] for the measured
+    * verdict: at THIS graph's bounded-degree shape
     * the exact wedge join is ~3× faster, so this path is opt-in.
     *
     * Scale shape vs the wedge join: signatures build from a k-way
@@ -749,121 +714,53 @@ object GraphAlgo {
     * k-core fixed iterations — exact whether or not converged).
     * Per round: one equi-join of the symmetric adjacency to the
     * label frame (shuffle on node id), one (node, label) count agg,
-    * one top-1-per-node (the row_number≤1 the optimizer rewrites to
-    * the TopKPerKey bounded heap) — all linear in |E|, barriered so
+    * one min_by top-1 per node — all linear in |E|, barriered so
     * round k+1's lineage starts at round k's output. Isolated nodes
     * never appear (no neighbours ⇒ no votes ⇒ not in the view).
     *
-    * Two conf-gated scale shapes (both parity-pinned in GraphSpec,
-    * both measured in tools/GraphIterAB — local loss / at-scale win,
-    * the `spark.graft.cc.aggstars` convention):
-    *
-    *   - `spark.graft.graph.bucketedAdj=true` — the round-invariant
-    *     adjacency is written ONCE to a table bucketed on the
-    *     vote-join key and read per round, instead of living in
-    *     executor block storage across the query. Locally this loses
-    *     ~1.4 s (parquet re-reads vs warm single-JVM blocks,
-    *     GraphIterAB r14/r15) but it is the shape a 100 TB graph
-    *     forces: 2|E| adjacency rows cannot be pinned in cluster
-    *     block storage per query, while a bucketed table keeps every
-    *     round's join exchange-free for the big side and survives
-    *     executor loss.
-    *   - `spark.graft.lpa.fusedvote=true` — the round's two
-    *     aggregates fuse into ONE [[graft.functions.expr.VoteTop1]]
-    *     pass whose (label → count) tally partial-aggregates
-    *     MAP-SIDE, so the per-round exchange carries one combined
-    *     tally per (task, node) instead of |E| raw vote rows. Locally
-    *     this measured a wash-to-loss (r15 GraphIterAB: fused 5.95 s
-    *     vs shipped 5.82 median — round-1 labels are all-distinct, so
-    *     nothing combines and the object-hash pass pays
-    *     serialization); at scale the shuffle-volume math flips it:
-    *     labels coalesce after round 1 and a hub's million votes
-    *     combine into one map entry per task. */
+    * Two scale shapes were measured and dropped (SURVEY §8): an
+    * adjacency written once to a table bucketed on the vote-join key,
+    * and a fused map-side-combinable vote aggregate. Both lost or tied
+    * locally (r14/r15 interleaved A/Bs). */
   def labelPropagationUnd(und: DataFrame, rounds: Int): DataFrame = {
     val spark = und.sparkSession
-    val bucketedAdj = spark.conf
-      .getOption("spark.graft.graph.bucketedAdj").contains("true")
-    val fusedVote = spark.conf
-      .getOption("spark.graft.lpa.fusedvote").contains("true")
-    // r7 shape (the r6-verdict lever, settled by the interleaved A/B
-    // in tools/LpaAB: scoped-minby-p16 5.6 s median vs the previous
-    // window-rank shape 8.9 s in the same windows, sf0.1/local[32]):
+    // r7 shape (the r6-verdict lever, settled by an interleaved A/B:
+    // scoped-minby-p16 5.6 s median vs the previous window-rank shape
+    // 8.9 s in the same windows, sf0.1/local[32]):
     // 1. the per-round top-1 is ONE min_by hash aggregate over the
     //    (-cnt, label) struct — struct order encodes "most votes,
     //    ties to the smallest label" — instead of a row_number window
     //    (no per-round sort/rank pass over the label frame);
-    // 2. label-frame stages run at HALF the session shuffle width
-    //    (still cluster-proportional at scale; the |V|-sized frames
-    //    don't fill default-width tasks, and fixed per-task cost
-    //    multiplied under the driver's co-tenant window: 30 s vs 8 s
-    //    quiet in r6);
-    // 3. AQE is disabled while the loop's PLANS are built and the
-    //    adjacency materializes (the eager barrier below runs inside
-    //    the scope); since r14 the round barriers are LAZY — the
-    //    consumer's single action materializes the cascaded rounds
-    //    under the session's own AQE setting, which the GraphIterAB
-    //    A/B measured FASTER than eager AQE-off per-round jobs
-    //    (5.86 s median vs 7.47: the per-round job boundaries, not
-    //    AQE, were the loop's overhead). Lineage still truncates at
-    //    every round. (Queries on this session run sequentially; the
-    //    toggle is scoped try/finally.)
+    // 2. label-frame stages run at a size-derived width (below);
+    // 3. only PLAN BUILDING runs inside withAqeOff: each lazy
+    //    barrier's physical plan is built there, non-adaptive. The
+    //    adjacency and the rounds materialize lazily, when the
+    //    consumer's single action runs after the scope has restored
+    //    the session's AQE setting — measured faster than eager
+    //    AQE-off per-round jobs (r14: 5.86 s median vs 7.47; the
+    //    per-round job boundaries, not AQE, were the loop's
+    //    overhead). Lineage still truncates at every round.
     // r16: labelParts derives from the ADJACENCY SIZE (2|E| rows,
     // one cheap count of the input view) instead of half the session
     // width — the same size-derived parallelism as loopParts, so a
     // small graph stops paying 16 tasks per round for frames whose
     // per-task row counts are in the low thousands, while at cluster
     // scale the clamp returns the session width and nothing changes.
-    val labelParts = loopParts(spark, 2L * und.count(),
+    val labelParts = loopParts(2L * und.count(),
       spark.sessionState.conf.numShufflePartitions,
       JoinLoopRowsPerTask)
     withAqeOff(spark) {
-      val savedFb = spark.conf.get(
-        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "128")
-      if (fusedVote) spark.conf.set(
-        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        (4 << 20).toString) // the tally maps are small; keep hashing
-      try {
-      val rawAdj = und.select(col("a").as("node"), col("b").as("nbr"))
+      // pre-partition the (big, round-invariant) adjacency by the
+      // join key BEFORE the barrier — localCheckpoint preserves the
+      // output partitioning through LogicalRDD, so every round's vote
+      // join exchanges only the small label frame
+      // r17: LAZY — the rounds are already lazy (r14), so the eager
+      // flavor's separate adjacency job only added a job boundary;
+      // the consumer's one action materializes the adjacency blocks
+      // first and every round reads them.
+      val adj = und.select(col("a").as("node"), col("b").as("nbr"))
         .unionAll(und.select(col("b").as("node"), col("a").as("nbr")))
-      val adjTbl = if (bucketedAdj)
-        Some("graft_lpa_adj_" + java.util.UUID.randomUUID()
-          .toString.replace("-", "").take(12))
-      else None
-      val adj =
-        if (bucketedAdj) {
-          // 100 TB shape: the round-invariant adjacency goes ONCE to
-          // a table bucketed on the vote-join key; every round reads
-          // it exchange-free from (distributed) storage instead of
-          // pinning 2|E| rows in executor blocks for the query's
-          // lifetime. PER-INVOCATION table name (r15-advice low): a
-          // fixed name let two queries sharing a warehouse clobber
-          // each other's adjacency; each invocation now writes its
-          // own table and drops it after the final eager barrier
-          // detaches the result. Orphaned-location guard kept (a
-          // leftover warehouse dir without a catalog entry fails
-          // saveAsTable otherwise).
-          val tbl = adjTbl.get
-          spark.sql(s"DROP TABLE IF EXISTS $tbl")
-          val loc = new org.apache.hadoop.fs.Path(
-            spark.conf.get("spark.sql.warehouse.dir"), tbl)
-          val fs = loc.getFileSystem(
-            spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(loc)) fs.delete(loc, true)
-          rawAdj.write.mode("overwrite").bucketBy(labelParts, "nbr")
-            .saveAsTable(tbl)
-          spark.table(tbl)
-        } else
-          // block-storage shape: pre-partition the (big,
-          // round-invariant) adjacency by the join key BEFORE the
-          // barrier — localCheckpoint preserves the output
-          // partitioning through LogicalRDD, so every round's vote
-          // join exchanges only the small label frame
-          // r17: LAZY — the rounds are already lazy (r14), so the
-          // eager flavor's separate adjacency job only added a job
-          // boundary; the consumer's one action materializes the
-          // adjacency blocks first and every round reads them.
-          rawAdj.repartition(labelParts, col("nbr")).barrier(false)
+        .repartition(labelParts, col("nbr")).barrier(false)
       var lab = adj.select(col("node")).distinct()
         .withColumn("label", col("node"))
       for (r <- 1 to rounds) {
@@ -880,52 +777,30 @@ object GraphAlgo {
           // argument above and by the 3-SF oracle re-gate).
           lab = adj.groupBy(col("node"))
             .agg(min(col("nbr")).as("label"))
-            .barrier(bucketedAdj)
+            .barrier(false)
         } else {
-        // one exchange per round: hashpartitioning(node) satisfies
-        // the (node, label) vote count's clustered distribution
-        // (subset key) AND the per-node min_by's, so both aggregates
-        // run exchange-free on the repartitioned join output.
-        // LAZY round barriers (r14 GraphIterAB, interleaved 4-rep A/B
-        // at sf0.1: lazy 5.86 s median, tight [5.40-6.09], vs eager
-        // 7.47 median with 4.95-8.26 spread, bit-identical labels):
-        // the consumer's single action materializes each round's
-        // blocks in one cascaded job — per-round job boundaries only
-        // added scheduling overhead. Lineage still truncates at every
-        // round, so the plan never deepens past one round. In
-        // bucketedAdj mode the rounds are EAGER instead, so the
-        // returned frame never references the overwritable table.
-        val votes = adj
-          .join(lab.select(col("node").as("nbr"), col("label")), "nbr")
-        lab = (if (fusedVote)
-          // map-side-combinable tally: partial VoteTop1 runs BEFORE
-          // the exchange, which then carries combined tallies
-          votes.groupBy(col("node"))
-            .agg(graft.functions.expr.GraphAggs
-              .voteTop1(col("label")).as("label"))
-        else votes
-          .repartition(labelParts, col("node"))
-          .groupBy(col("node"), col("label")).agg(count(lit(1)).as("cnt"))
-          .groupBy(col("node"))
-          .agg(min_by(col("label"),
-            struct((-col("cnt")).as("nc"), col("label"))).as("label")))
-          .barrier(bucketedAdj)
+          // one exchange per round: hashpartitioning(node) satisfies
+          // the (node, label) vote count's clustered distribution
+          // (subset key) AND the per-node min_by's, so both
+          // aggregates run exchange-free on the repartitioned join
+          // output. LAZY round barriers (r14, interleaved 4-rep A/B
+          // at sf0.1: lazy 5.86 s median, tight [5.40-6.09], vs eager
+          // 7.47 median with 4.95-8.26 spread, bit-identical labels):
+          // the consumer's single action materializes each round's
+          // blocks in one cascaded job — per-round job boundaries
+          // only added scheduling overhead. Lineage still truncates
+          // at every round, so the plan never deepens past one round.
+          lab = adj
+            .join(lab.select(col("node").as("nbr"), col("label")), "nbr")
+            .repartition(labelParts, col("node"))
+            .groupBy(col("node"), col("label")).agg(count(lit(1)).as("cnt"))
+            .groupBy(col("node"))
+            .agg(min_by(col("label"),
+              struct((-col("cnt")).as("nc"), col("label"))).as("label"))
+            .barrier(false)
         }
       }
-      // in bucketedAdj mode the last round's EAGER barrier already
-      // materialized lab — the result is table-independent, so the
-      // per-invocation adjacency table can drop NOW instead of
-      // lingering in the shared warehouse. rounds == 0 is the one
-      // case with no round barrier (r15-advice low): detach the
-      // initial lab frame eagerly before the drop.
-      if (bucketedAdj) {
-        if (rounds == 0) lab = lab.barrier(true)
-        adjTbl.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      }
       lab
-      } finally spark.conf.set(
-        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        savedFb)
     }
   }
 }

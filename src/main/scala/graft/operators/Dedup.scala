@@ -2110,7 +2110,7 @@ object Dedup {
     // row per input partition, and the join-back is AQE-skew-
     // splittable (the count side replicates across the split probe
     // partitions) — the second tokenize scan this costs is the right
-    // 100 TB trade (HotHashAB measures it; SURVEY §8).
+    // 100 TB trade (measured on a synthetic hot-hash corpus; SURVEY §8).
     val th = docs.select(col(id).as("did"),
       TextOps.tokenHashesSeq(col(text)).as("th"))
     val wh = th.select(col("did"),
@@ -2557,7 +2557,7 @@ object Dedup {
                      p: Int): DataFrame = {
     // native tokenHashesSeq + blockHashes: one primitive pass each,
     // no per-block slice allocation and no lambda-binding hazard
-    // (GramHashAB A/Bs this against the HOF composition it replaced).
+    // (measured against the HOF composition it replaced; SURVEY §8).
     val th = docs.select(col(id).as("did"),
         TextOps.tokens(col(text)).as("toks"),
         TextOps.tokenHashesSeq(col(text)).as("th"))

@@ -10,6 +10,24 @@ import graft.model.Tables
   * (SURVEY.md §4 determinism rule). */
 class EntryContractSpec extends SparkSpec {
 
+  test("the spec session is configured like the session Bench times") {
+    // Bench, Verify, Explain and the specs all build GraftSession.local:
+    // a setting missing here would let the oracle and the specs pass on
+    // physical plans the bench never runs
+    val sc = spark.sparkContext.getConf
+    val sql = spark.sessionState.conf
+    assert(sql.autoBroadcastJoinThreshold === 64L * 1024 * 1024)
+    assert(sc.get("spark.locality.wait") === "0s")
+    assert(sc.get("spark.sql.extensions") === "graft.plans.GraftExtensions")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(spark.conf.get(
+      "spark.sql.parquet.inferTimestampNTZ.enabled") === "false")
+    assert(sc.get("spark.cleaner.periodicGC.interval") ===
+      sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "15s"))
+    assert(sql.adaptiveExecutionEnabled)
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+  }
+
   test("entry() produces rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

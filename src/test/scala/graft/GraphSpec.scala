@@ -86,35 +86,15 @@ class GraphSpec extends SparkSpec {
     assert(cc.where($"node" === $"component").count() === nComponents)
   }
 
-  test("connectedComponents: aggstars shape equals the window shape " +
-      "(sf chains and a hub star)") {
+  test("connectedComponents: a 500-spoke hub star and a 10-node ring") {
     import graft.graph.GraphAlgo
-    def withFlag[T](v: Boolean)(f: => T): T = {
-      spark.conf.set("spark.graft.cc.aggstars", v.toString)
-      try f finally spark.conf.unset("spark.graft.cc.aggstars")
-    }
-    def comps(e: org.apache.spark.sql.DataFrame, flag: Boolean) =
-      withFlag(flag) {
-        GraphAlgo.connectedComponents(e)
-          .as[(String, String)].collect().toSet
-      }
-    // the b14 input: consecutive same-(user, type) event chains
-    val ev = Tables.events(spark, sf)
-    val chain = ev.select($"user_id", $"event_type", $"event_id")
-      .withColumn("nxt", org.apache.spark.sql.functions.lead($"event_id", 1)
-        .over(org.apache.spark.sql.expressions.Window
-          .partitionBy($"user_id", $"event_type").orderBy($"event_id")))
-      .where($"nxt".isNotNull)
-      .select(concat(lit("e"), $"event_id").as("src"),
-        concat(lit("e"), $"nxt").as("dst"))
-    assert(comps(chain, flag = true) === comps(chain, flag = false))
-    // a hub star (the shape the agg variant exists for) + a ring
     val hub = ((1 to 500).map(i => ("hub", s"n$i")) ++
       (1 to 10).map(i => (s"r$i", s"r${i % 10 + 1}"))).toDF("src", "dst")
-    val w = comps(hub, flag = false)
-    assert(comps(hub, flag = true) === w)
-    // exactly two components: the 501-node hub star and the 10-node ring
-    assert(w.map(_._2).size === 2)
+    val w = GraphAlgo.connectedComponents(hub)
+      .as[(String, String)].collect().toSet
+    // exactly two components: the 501-node hub star and the 10-node
+    // ring, each labeled by its smallest member
+    assert(w.map(_._2) === Set("hub", "r1"))
     assert(w.size === 511)
   }
 
@@ -248,60 +228,5 @@ class GraphSpec extends SparkSpec {
       .collect().map(r => r.getAs[String]("node") ->
         r.getAs[String]("label")).toMap
     assert(again === out)
-  }
-
-  test("labelPropagation: the bucketedAdj and fusedvote scale shapes " +
-      "equal the shipped shape (sf events graph)") {
-    import graft.graph.GraphAlgo
-    def withFlags[T](flags: (String, String)*)(f: => T): T = {
-      flags.foreach { case (k, v) => spark.conf.set(k, v) }
-      try f finally flags.foreach { case (k, _) => spark.conf.unset(k) }
-    }
-    val und = GraphAlgo.undirectedSimple(
-      Tables.events(spark, sf).select(
-        concat(lit("u"), $"user_id").as("src"),
-        concat(lit("e"), $"event_id" % 500).as("dst")))
-      .localCheckpoint(true)
-    def lpa() = GraphAlgo.labelPropagationUnd(und, rounds = 3)
-      .as[(String, String)].collect().toSet
-    val shipped = lpa()
-    assert(shipped.nonEmpty)
-    val bucketed =
-      withFlags("spark.graft.graph.bucketedAdj" -> "true")(lpa())
-    assert(bucketed === shipped, "bucketedAdj shape diverged")
-    val fused = withFlags("spark.graft.lpa.fusedvote" -> "true")(lpa())
-    assert(fused === shipped, "fusedvote shape diverged")
-    val both = withFlags("spark.graft.graph.bucketedAdj" -> "true",
-      "spark.graft.lpa.fusedvote" -> "true")(lpa())
-    assert(both === shipped, "composed scale shapes diverged")
-  }
-
-  test("labelPropagation bucketedAdj: invocations can't clobber each " +
-      "other (rounds == 0 detaches too) and no adjacency tables linger") {
-    import graft.graph.GraphAlgo
-    spark.conf.set("spark.graft.graph.bucketedAdj", "true")
-    try {
-      val undA = GraphAlgo.undirectedSimple(
-        Seq(("a1", "a2"), ("a2", "a3")).toDF("src", "dst"))
-        .localCheckpoint(true)
-      val undB = GraphAlgo.undirectedSimple(
-        Seq(("b1", "b2"), ("b3", "b4")).toDF("src", "dst"))
-        .localCheckpoint(true)
-      // rounds == 0 is the no-round-barrier case (r15-advice low):
-      // the result must be usable AFTER a second invocation has
-      // dropped-and-rewritten whatever adjacency tables it owns
-      val r0 = GraphAlgo.labelPropagationUnd(undA, rounds = 0)
-      val r1 = GraphAlgo.labelPropagationUnd(undB, rounds = 1)
-      assert(r0.as[(String, String)].collect().toSet ===
-        Set("a1" -> "a1", "a2" -> "a2", "a3" -> "a3"),
-        "rounds == 0 result was clobbered by a later invocation")
-      // one round: every node adopts its (sole) neighbor's id
-      assert(r1.as[(String, String)].collect().toSet ===
-        Set("b1" -> "b2", "b2" -> "b1", "b3" -> "b4", "b4" -> "b3"))
-      // per-invocation tables drop after the final eager barrier
-      val linger = spark.catalog.listTables().collect()
-        .map(_.name).filter(_.startsWith("graft_lpa_adj"))
-      assert(linger.isEmpty, s"lingering tables: ${linger.mkString(",")}")
-    } finally spark.conf.unset("spark.graft.graph.bucketedAdj")
   }
 }

@@ -10,55 +10,6 @@ import graft.functions.TextOps
 class RandomizedParitySpec extends SparkSpec {
   import spark.implicits._
 
-  test("vote_top1 equals the count+min_by composition on random votes " +
-      "(string and long labels, skew, ties, single-voter groups)") {
-    import graft.functions.expr.GraphAggs.voteTop1
-    val rnd = new scala.util.Random(1234)
-    // skewed label draws so ties and runaway winners both occur; a few
-    // groups get exactly one vote, one label set is shared by all
-    val votes = (1 to 20000).map { _ =>
-      val g = rnd.nextInt(300)
-      val l = if (rnd.nextBoolean()) rnd.nextInt(5) // heavy ties
-              else rnd.nextInt(50)
-      (g.toLong, s"label_$l", l.toLong)
-    }.toDF("g", "slabel", "llabel")
-      .localCheckpoint(true) // pin the sample
-    def composed(c: String) = votes
-      .groupBy($"g", col(c)).agg(count(lit(1)).as("cnt"))
-      .groupBy($"g")
-      .agg(min_by(col(c), struct((-$"cnt").as("nc"), col(c))).as("top"))
-    def fused(c: String) = votes.groupBy($"g")
-      .agg(voteTop1(col(c)).as("top"))
-    for (c <- Seq("slabel", "llabel")) {
-      val diff = composed(c).as("a")
-        .join(fused(c).as("b"), $"a.g" === $"b.g", "full")
-        .where($"a.top".isNull || $"b.top".isNull ||
-          $"a.top" =!= $"b.top")
-      assert(diff.isEmpty,
-        s"$c: " + diff.limit(5).collect().mkString("\n"))
-    }
-  }
-
-  test("vote_top1 rejects buffer-backed child types at analysis " +
-      "(binary, array)") {
-    import graft.functions.expr.GraphAggs.voteTop1
-    // BinaryType: Array[Byte] tally keys hash by REFERENCE — silent
-    // miscounts; buffer-backed arrays/structs corrupt as input
-    // buffers are reused. Both must fail analysis, not miscount.
-    val bin = spark.range(4)
-      .select($"id".cast("string").cast("binary").as("b"))
-    intercept[org.apache.spark.sql.AnalysisException] {
-      bin.agg(voteTop1($"b")).collect()
-    }
-    val arr = spark.range(4).select(array($"id").as("a"))
-    intercept[org.apache.spark.sql.AnalysisException] {
-      arr.agg(voteTop1($"a")).collect()
-    }
-    // the supported atomic types still work
-    assert(spark.range(9).select(($"id" % 3).as("l"))
-      .agg(voteTop1($"l")).as[Long].head() === 0L)
-  }
-
   test("ShingleHashes3 equals per-shingle string hashing on 300 random docs") {
     val rnd = new scala.util.Random(42)
     val alphabet = "abcdefghijklmnopqrstuvwxyz0123456789"
