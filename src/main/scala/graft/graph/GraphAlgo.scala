@@ -9,31 +9,13 @@ import graft.util.Barriers.BarrierOps
   */
 object GraphAlgo {
 
-  /** Serializes the AQE-off scopes below: the iterative algorithms
-    * (PageRank, triangle count, LPA) measured faster with AQE's
-    * per-stage re-planning disabled, which requires a session-conf
-    * toggle — Spark has no per-query AQE switch. The JVM-wide lock
-    * makes overlapping scoped calls impossible (no stale-value
-    * restore race); an UNRELATED query racing on the same session
-    * can still plan one stage with AQE off — harmless for
-    * correctness, documented here for the perf-curious. Each scope
-    * materializes its result eagerly inside the lock. */
-  private val aqeScopeLock = new Object
-  private def withAqeOff[T](spark: org.apache.spark.sql.SparkSession)
-      (body: => T): T = aqeScopeLock.synchronized {
-    val saved = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try body
-    finally spark.conf.set("spark.sql.adaptive.enabled", saved)
-  }
-
-  /** Rows/task for the WINDOW-SORT loop family (CC's
-    * alternating stars, k-core's degree rounds): per-row work is a
-    * per-center sort, heavy enough that ~32k-row tasks amortize their
-    * scheduling cost (r16 partition sweep on b14's 185k-row rounds:
+  /** Rows/task for the WINDOW-SORT loop family (CC's alternating
+    * stars): per-row work is a per-center sort, heavy enough that
+    * ~32k-row tasks amortize their scheduling cost (r16 partition
+    * sweep on b14's 185k-row rounds:
     * 6 parts = 0.52 s/round, 1 part = 1.1-1.4, 23 parts = 2.3-5.4;
     * re-confirmed r17: b14 at 32768 = 4.35 s vs 5.15 at 131072). */
-  private val SortLoopRowsPerTask = 32768L
+  private[graft] val SortLoopRowsPerTask = 32768L
   /** Rows/task for the JOIN/AGG loop family (PageRank, LPA,
     * path centrality, shortest paths): per-row work is a codegen'd
     * hash probe + partial agg — far cheaper per row, so tasks need
@@ -46,7 +28,7 @@ object GraphAlgo {
     * session width, which the driver's loaded-box window punished
     * ~4x (r16 verdict #1); 131072 halves the fan-out (15 parts) AND
     * is faster on a quiet box. */
-  private val JoinLoopRowsPerTask = 131072L
+  private[graft] val JoinLoopRowsPerTask = 131072L
 
   /** Partition count for one round of a CPU-bound iterative loop
     * (r16). AQE's coalescing is BYTE-based (parallelismFirst targets
@@ -58,54 +40,24 @@ object GraphAlgo {
     * partition count derives from the round's row count instead:
     * ceil(rows / rowsPerTask), clamped to the session shuffle
     * parallelism — at cluster scale the quotient exceeds the session
-    * setting, the clamp returns the session value, and behavior is
-    * unchanged (a size-derived floor on parallelism, not a local[32]
-    * constant). */
-  private def loopParts(rows: Long, ceiling: Int,
-                        rowsPerTask: Long): Int =
+    * setting and the clamp returns the session value (a size-derived
+    * floor on parallelism, not a local[32] constant).
+    * Loops put it into their own plans as `repartition(n, key)`,
+    * which AQE never coalesces (shuffle origin REPARTITION_BY_NUM) and
+    * which satisfies the keyed window / aggregate / join above it —
+    * so no session conf is written, and a query planned concurrently
+    * on the same session keeps the session's own settings. */
+  private[graft] def loopParts(rows: Long, ceiling: Int,
+                               rowsPerTask: Long): Int =
     math.max(1L, math.min(ceiling.toLong,
       (rows + rowsPerTask - 1) / rowsPerTask)).toInt
 
-  /** Scoped (set/restore, under [[aqeScopeLock]]) shuffle parallelism
-    * + AQE byte-coalescing override for an iterative loop's plans and
-    * actions. `body` receives a setter the loop calls per round with
-    * the round's input row count. The clamp CEILING is the session
-    * shuffle width captured ONCE at scope entry (r16 advice: reading
-    * the live conf inside the loop re-read the previous round's own
-    * setting, so per-round parallelism could only ratchet down). At
-    * cluster scale rows/rowsPerTask far exceeds any session width, so
-    * the clamp returns the session value and the scope is a no-op —
-    * the sizing only bites where data is small relative to width. */
-  private def withLoopParts[T](spark: org.apache.spark.sql.SparkSession,
-                               rowsPerTask: Long = SortLoopRowsPerTask)
-      (body: (Long => Unit) => T): T = aqeScopeLock.synchronized {
-    val ceiling = spark.sessionState.conf.numShufflePartitions
-    val savedP = spark.conf.get("spark.sql.shuffle.partitions",
-      ceiling.toString)
-    val savedC = spark.conf.get(
-      "spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
-      "false")
-    def set(rows: Long): Unit = spark.conf.set(
-      "spark.sql.shuffle.partitions",
-      loopParts(rows, ceiling, rowsPerTask).toString)
-    try body(set)
-    finally {
-      spark.conf.set("spark.sql.shuffle.partitions", savedP)
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
-        savedC)
-    }
-  }
-
-  /** Scoped size-derived loop parallelism for bounded-round join/agg
-    * dataflows OUTSIDE this file (b15 path centrality, b21 shortest
-    * paths): plans built and actions run inside `body` use
-    * [[loopParts]](rows) shuffle partitions with AQE byte-coalescing
-    * disabled — at cluster scale the clamp returns the session width
-    * and the scope is a no-op. */
-  def withSizedLoop[T](spark: org.apache.spark.sql.SparkSession,
-                       rows: Long)(body: => T): T =
-    withLoopParts(spark, JoinLoopRowsPerTask) { set => set(rows); body }
+  /** [[loopParts]] for a JOIN/AGG loop over `rows` input rows, clamped
+    * to the session's shuffle width (read, never written). */
+  private[graft] def joinLoopParts(
+      spark: org.apache.spark.sql.SparkSession, rows: Long): Int =
+    loopParts(rows, spark.sessionState.conf.numShufflePartitions,
+      JoinLoopRowsPerTask)
 
   /** Undirected connected components via alternating large-star /
     * small-star contraction (Kiveris et al., "Connected Components in
@@ -165,11 +117,15 @@ object GraphAlgo {
     // skew-splittable join) was measured and dropped: on the
     // max-degree-3k testdata graphs the two tie (SURVEY §8l) and the
     // window saves a join operator.
+    // Each star's window runs at the round's width `n` (loopParts):
+    // the explicit-count repartition on the window key is the
+    // window's only exchange, and AQE never coalesces it.
     // large-star: around each center c, link every LARGER neighbor to
     // the minimum of N(c) ∪ {c} (keeps orientation, halves path reach)
-    def largeStar(E: DataFrame): DataFrame = {
+    def largeStar(E: DataFrame, n: Int): DataFrame = {
       val bid = E.select(col("u").as("c"), col("v").as("n"))
         .unionAll(E.select(col("v").as("c"), col("u").as("n")))
+        .repartition(n, col("c"))
       bid.withColumn("m",
         least(min(col("n")).over(Window.partitionBy(col("c"))), col("c")))
         .where(col("n") > col("c") && col("n") =!= col("m"))
@@ -180,9 +136,11 @@ object GraphAlgo {
     }
     // small-star: around each center u (over the oriented edges), link
     // every smaller neighbor and u itself to min(N(u) ∪ {u}) (edges
-    // are oriented u>v, so min(N(u) ∪ {u}) = min(v))
-    def smallStar(E: DataFrame): DataFrame = {
-      E.withColumn("m", min(col("v")).over(Window.partitionBy(col("u"))))
+    // are oriented u>v, so min(N(u) ∪ {u}) = min(v)). The trailing
+    // distinct keeps its own exchange, sized by AQE.
+    def smallStar(E: DataFrame, n: Int): DataFrame = {
+      E.repartition(n, col("u"))
+        .withColumn("m", min(col("v")).over(Window.partitionBy(col("u"))))
         .select(explode(array(col("v"), col("u"))).as("n"), col("m"))
         .where(col("n") =!= col("m"))
         .select(greatest(col("n"), col("m")).as("u"),
@@ -193,15 +151,16 @@ object GraphAlgo {
     var iter = 0
     var prev: (Long, BigDecimal) = (-1L, BigDecimal(-1))
     var done = false
-    // current edge count drives the loop's partition sizing (see
-    // loopParts — AQE's byte-based coalescing serialized every round
-    // onto one task): the input count is one cheap job over the
-    // already-materialized barrier blocks; each later round's count
-    // rides the convergence aggregate for free.
+    // current edge count sizes each round (see loopParts — AQE's
+    // byte-based coalescing serialized every round onto one task):
+    // the input count is one cheap job over the already-materialized
+    // barrier blocks; each later round's count rides the convergence
+    // aggregate for free.
+    val ceiling = edgesIn.sparkSession.sessionState.conf.numShufflePartitions
     var curEdges = dir.count()
-    withLoopParts(edgesIn.sparkSession) { setParts =>
     while (iter < maxIter && !done) {
-      setParts(2L * curEdges) // bid = both directions of the edge set
+      // bid = both directions of the edge set
+      val n = loopParts(2L * curEdges, ceiling, SortLoopRowsPerTask)
       // lazy checkpoint: the convergence agg below is the action that
       // materializes the blocks — one job per round, not two.
       // Measured round-5 alternatives, all SLOWER here than this
@@ -213,7 +172,7 @@ object GraphAlgo {
       // 12.7 s — vs 10.3 s for this shape. Per-stage scheduling
       // overhead dominates at bench scale; at cluster scale AQE sizes
       // these same exchanges, so the shape holds there too.
-      val next = smallStar(largeStar(e)).barrier(false)
+      val next = smallStar(largeStar(e, n), n).barrier(false)
       // convergence = edge set is a fixed point: same count and same
       // order-independent hash — one agg over the just-materialized
       // blocks, no extra join
@@ -226,7 +185,6 @@ object GraphAlgo {
       curEdges = sig._1
       e = next
       iter += 1
-    }
     }
     // fixed point is a star forest u→root; roots map to themselves
     nodes.join(e, col("node") === col("u"), "left")
@@ -262,39 +220,24 @@ object GraphAlgo {
     val Scale = 1000000000000L
     val dPct = math.round(damping * 100).toInt
     val base = Scale / 100 * (100 - dPct)
-    // AQE off for the whole chain, which the final eager barrier
-    // below executes inside this scope: the lazy iteration chain is
-    // dozens of tiny stages whose per-stage AQE re-planning costs
-    // more than it saves (GraphAB interleaved A/B at sf0.1: 4.51 s
-    // AQE vs 3.36 s without — the same finding as the b28 LPA loop;
-    // CC and k-core measured the OPPOSITE, their edge sets shrink
-    // per round and AQE's coalescing wins, so they keep it).
-    val spark = edgesIn.sparkSession
-    withAqeOff(spark) {
     val dir = edgesIn.toDF("src", "dst")
-    // r16: the whole chain (weighted edges, node set, every
-    // iteration) runs at a size-derived partition count instead of
-    // the static session width — with AQE off nothing coalesces, so
+    // r16: the chain runs at a size-derived width (loopParts; one
+    // cheap count of the edge input), not the static session width —
     // 32 session partitions meant 32 tasks per stage for |V|-sized
-    // frames whose per-task row counts were in the low thousands
-    // (pure scheduling overhead; see loopParts). One cheap count of
-    // the edge input sizes the scope; at cluster scale the clamp
-    // returns the session width unchanged. Everything inside still
-    // materializes eagerly inside the AQE-off scope, and the
-    // per-iteration shapes are untouched.
-    withLoopParts(spark, JoinLoopRowsPerTask) { setParts =>
-    setParts(2L * dir.count())
+    // frames with per-task row counts in the low thousands.
+    val n = joinLoopParts(edgesIn.sparkSession, 2L * dir.count())
     // out-degree folded into the edge relation via a window count —
     // ONE shuffle on src, and the materialized result STAYS
-    // hash-partitioned on src, so the per-iteration rank join never
-    // re-shuffles the (large) edge side
-    val weighted = dir
+    // hash-partitioned on src (the barrier keeps it), so the
+    // per-iteration rank join never re-shuffles the (large) edge side
+    val weighted = dir.repartition(n, col("src"))
       .withColumn("od", count(lit(1)).over(Window.partitionBy(col("src"))))
       .barrier(true)
     // node set hash-partitioned on node: co-located with both the
     // contribution sums (partitioned on dst) and the next rank
     val nodes = dir.select(col("src").as("node"))
       .unionAll(dir.select(col("dst").as("node")))
+      .repartition(n, col("node"))
       .distinct().barrier(true)
     var rank = nodes.select(col("node").as("id"), lit(Scale).as("r"))
     for (i <- 1 to iters) {
@@ -305,22 +248,15 @@ object GraphAlgo {
       // |E|-row join evaluation (r15 same-session isolated 5-pass
       // A/B at sf0.1: 2.42→2.24 s median, 3-SF oracle re-gate green).
       rank =
-        if (i == 1) {
-          val contrib = weighted
-            .select(col("dst"), expr(s"$Scale div od").as("c"))
-          val sums = contrib.groupBy(col("dst"))
-            .agg(sum(col("c").cast("decimal(38,0)")).as("s"))
-          nodes.join(sums.hint("shuffle_hash"),
-              col("node") === col("dst"), "left")
-            .select(col("node").as("id"),
-              (lit(base) + coalesce(expr(s"(s * $dPct) div 100"),
-                lit(0L))).as("r"))
-        } else pageRankStep(weighted, nodes, rank, dPct, base)
+        if (i == 1) rankUpdate(weighted
+          .select(col("dst"), expr(s"$Scale div od").as("c")),
+          nodes, dPct, base, n)
+        else pageRankStep(weighted, nodes, rank, dPct, base, n)
       // EAGER barrier per iteration (r14 GraphIterAB, interleaved
       // 4-rep A/B at sf0.1: eager-each 3.83 s median / 3.34 min vs
       // the previous lazy chain 4.32 / 4.03, every rep faster,
-      // bit-identical ranks): with AQE off the lazy chain compiles
-      // one deep many-stage job whose scheduling overhead exceeds the
+      // bit-identical ranks): the lazy chain compiled one deep
+      // many-stage job whose scheduling overhead exceeded the
       // per-iteration checkpoint cost, and the eager shape also
       // bounds lineage at any iteration count. Correctness never
       // needed the barrier — fixed-point arithmetic is partition- and
@@ -328,12 +264,10 @@ object GraphAlgo {
       // r7-r13 ran lazy with cadence-8 lineage relief).
       if (i < iters) rank = rank.barrier(true)
     }
-    // eager: the full chain materializes here, inside the AQE-off
-    // scope; the consumer reads the checkpointed per-node ranks
+    // eager: the last iteration materializes here; the consumer
+    // reads the checkpointed per-node ranks
     rank.barrier(true).select(col("id"),
       (col("r").cast("double") / lit(Scale.toDouble)).as("rank"))
-    }
-    }
   }
 
   /** One fixed-point PageRank iteration (exposed for plan-shape
@@ -342,16 +276,26 @@ object GraphAlgo {
     * shuffle_hash hints: rank and the contribution sums are per-NODE
     * relations — broadcasting them is wrong at scale (and locally it
     * serializes every iteration through the driver); with the inputs
-    * pre-partitioned on the join keys the hash joins are exchange-free
-    * and the iteration pays exactly one shuffle (the groupBy dst). */
+    * pre-partitioned on the join keys at `parts` the hash joins are
+    * exchange-free and the iteration pays exactly one shuffle (the
+    * groupBy dst). */
   private[graft] def pageRankStep(weighted: DataFrame, nodes: DataFrame,
                                   rank: DataFrame, dPct: Int,
-                                  base: Long): DataFrame = {
-    val contrib = weighted
+                                  base: Long, parts: Int): DataFrame =
+    rankUpdate(weighted
       .join(rank.hint("shuffle_hash"), weighted("src") === rank("id"))
-      .select(col("dst"), expr("r div od").as("c"))
+      .select(col("dst"), expr("r div od").as("c")),
+      nodes, dPct, base, parts)
+
+  /** Next ranks from (dst, c) contributions. The sums land on `parts`
+    * partitions, the nodes' width: the repartition is dropped when the
+    * aggregate's own exchange already has that width, and otherwise
+    * keeps the join and the next round co-partitioned. */
+  private def rankUpdate(contrib: DataFrame, nodes: DataFrame, dPct: Int,
+                         base: Long, parts: Int): DataFrame = {
     val sums = contrib.groupBy(col("dst"))
       .agg(sum(col("c").cast("decimal(38,0)")).as("s"))
+      .repartition(parts, col("dst"))
     nodes.join(sums.hint("shuffle_hash"), col("node") === col("dst"), "left")
       .select(col("node").as("id"),
         (lit(base) + coalesce(expr(s"(s * $dPct) div 100"), lit(0L)))
@@ -378,13 +322,9 @@ object GraphAlgo {
     triangleCountUnd(undirected(edges))
 
   /** [[triangleCount]] over a pre-built [[undirectedSimple]] view.
-    * Runs with AQE disabled for its scope (GraphAB A/B at sf0.1:
-    * 3.23 s AQE vs 2.50 s without — the oriented wedge join is a few
-    * well-sized stages and re-planning only adds latency); the final
-    * one-row count materializes eagerly inside the scope. */
+    * The one-row count materializes eagerly, planned by the session's
+    * AQE (AQE off measured a tie in paired suite runs, SURVEY §8r). */
   def triangleCountUnd(und: DataFrame): DataFrame = {
-    val spark = und.sparkSession
-    withAqeOff(spark) {
     val deg = und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -410,7 +350,6 @@ object GraphAlgo {
         Seq("v1", "v2"), "left_semi")
       .agg(count(lit(1)).as("n_triangles"))
       .barrier(true)
-    }
   }
 
   /** Undirected simple-graph view of a (src, dst) edge frame: loops
@@ -462,16 +401,16 @@ object GraphAlgo {
   def kCoreUnd(und0: DataFrame, k: Int, rounds: Int): DataFrame = {
     var und = und0.barrier(true)
     // input count: one cheap job over the just-materialized blocks —
-    // it sizes the loop's partitions (see loopParts) and seeds the
-    // early-exit comparison, so a graph that is already a k-core
-    // exits after round 1 instead of round 2 (identical output: an
-    // unchanged count means the round was the identity either way).
+    // it seeds the early-exit comparison, so a graph that is already
+    // a k-core exits after round 1 instead of round 2 (identical
+    // output: an unchanged count means the round was the identity
+    // either way). The round's one keyed exchange, the degree
+    // aggregate, is left to AQE: a loop width measured no faster
+    // (SURVEY §8r).
     var prevCount = und.count()
     var r = 0
     var done = false
-    withLoopParts(und0.sparkSession) { setParts =>
     while (r < rounds && !done) {
-      setParts(2L * prevCount)
       // r16 FRONTIER reshape (guide §3.1): filter against the DROPPED
       // set (deg < k) with anti joins instead of semi joins against
       // the |V|-sized keep-set. Identical survivor set (keep is the
@@ -499,7 +438,6 @@ object GraphAlgo {
       done = c == prevCount
       prevCount = c
       r += 1
-    }
     }
     undDegrees(und)
   }
@@ -723,7 +661,6 @@ object GraphAlgo {
     * and a fused map-side-combinable vote aggregate. Both lost or tied
     * locally (r14/r15 interleaved A/Bs). */
   def labelPropagationUnd(und: DataFrame, rounds: Int): DataFrame = {
-    val spark = und.sparkSession
     // r7 shape (the r6-verdict lever, settled by an interleaved A/B:
     // scoped-minby-p16 5.6 s median vs the previous window-rank shape
     // 8.9 s in the same windows, sf0.1/local[32]):
@@ -732,75 +669,67 @@ object GraphAlgo {
     //    ties to the smallest label" — instead of a row_number window
     //    (no per-round sort/rank pass over the label frame);
     // 2. label-frame stages run at a size-derived width (below);
-    // 3. only PLAN BUILDING runs inside withAqeOff: each lazy
-    //    barrier's physical plan is built there, non-adaptive. The
-    //    adjacency and the rounds materialize lazily, when the
-    //    consumer's single action runs after the scope has restored
-    //    the session's AQE setting — measured faster than eager
-    //    AQE-off per-round jobs (r14: 5.86 s median vs 7.47; the
-    //    per-round job boundaries, not AQE, were the loop's
-    //    overhead). Lineage still truncates at every round.
+    // 3. the session's AQE plans the rounds (an AQE-off scope
+    //    measured a tie in paired suite runs, SURVEY §8r); every
+    //    round barrier keeps its key's partitioning, so the next
+    //    round's join does not re-exchange it.
     // r16: labelParts derives from the ADJACENCY SIZE (2|E| rows,
     // one cheap count of the input view) instead of half the session
     // width — the same size-derived parallelism as loopParts, so a
     // small graph stops paying 16 tasks per round for frames whose
     // per-task row counts are in the low thousands, while at cluster
     // scale the clamp returns the session width and nothing changes.
-    val labelParts = loopParts(2L * und.count(),
-      spark.sessionState.conf.numShufflePartitions,
-      JoinLoopRowsPerTask)
-    withAqeOff(spark) {
-      // pre-partition the (big, round-invariant) adjacency by the
-      // join key BEFORE the barrier — localCheckpoint preserves the
-      // output partitioning through LogicalRDD, so every round's vote
-      // join exchanges only the small label frame
-      // r17: LAZY — the rounds are already lazy (r14), so the eager
-      // flavor's separate adjacency job only added a job boundary;
-      // the consumer's one action materializes the adjacency blocks
-      // first and every round reads them.
-      val adj = und.select(col("a").as("node"), col("b").as("nbr"))
-        .unionAll(und.select(col("b").as("node"), col("a").as("nbr")))
-        .repartition(labelParts, col("nbr")).barrier(false)
-      var lab = adj.select(col("node")).distinct()
-        .withColumn("label", col("node"))
-      for (r <- 1 to rounds) {
-        if (r == 1) {
-          // ROUND-1 CLOSED FORM: at round 0 label(x) = x, and the
-          // undirectedSimple adjacency has no loops or parallel
-          // edges, so node n's votes are exactly its (distinct)
-          // neighbor ids — every count is 1 and "most frequent, ties
-          // to the smallest label" degenerates to min(nbr). One
-          // map-side-combinable agg replaces the round's label join,
-          // |E|-row re-exchange and two-aggregate vote fold (r15
-          // same-session isolated 5-pass A/B at sf0.1: b28
-          // 6.61→3.82 s median / 5.12→3.22 min; bit-identical by the
-          // argument above and by the 3-SF oracle re-gate).
-          lab = adj.groupBy(col("node"))
-            .agg(min(col("nbr")).as("label"))
-            .barrier(false)
-        } else {
-          // one exchange per round: hashpartitioning(node) satisfies
-          // the (node, label) vote count's clustered distribution
-          // (subset key) AND the per-node min_by's, so both
-          // aggregates run exchange-free on the repartitioned join
-          // output. LAZY round barriers (r14, interleaved 4-rep A/B
-          // at sf0.1: lazy 5.86 s median, tight [5.40-6.09], vs eager
-          // 7.47 median with 4.95-8.26 spread, bit-identical labels):
-          // the consumer's single action materializes each round's
-          // blocks in one cascaded job — per-round job boundaries
-          // only added scheduling overhead. Lineage still truncates
-          // at every round, so the plan never deepens past one round.
-          lab = adj
-            .join(lab.select(col("node").as("nbr"), col("label")), "nbr")
-            .repartition(labelParts, col("node"))
-            .groupBy(col("node"), col("label")).agg(count(lit(1)).as("cnt"))
-            .groupBy(col("node"))
-            .agg(min_by(col("label"),
-              struct((-col("cnt")).as("nc"), col("label"))).as("label"))
-            .barrier(false)
-        }
+    val labelParts = joinLoopParts(und.sparkSession, 2L * und.count())
+    // pre-partition the (big, round-invariant) adjacency by the
+    // join key BEFORE the barrier — the barrier keeps the
+    // partitioning, so every round's vote join exchanges only the
+    // small label frame
+    // r17: LAZY — the rounds are already lazy (r14), so the eager
+    // flavor's separate adjacency job only added a job boundary;
+    // the consumer's one action materializes the adjacency blocks
+    // first and every round reads them.
+    val adj = und.select(col("a").as("node"), col("b").as("nbr"))
+      .unionAll(und.select(col("b").as("node"), col("a").as("nbr")))
+      .repartition(labelParts, col("nbr")).barrier(false)
+    var lab = adj.select(col("node")).distinct()
+      .withColumn("label", col("node"))
+    for (r <- 1 to rounds) {
+      if (r == 1) {
+        // ROUND-1 CLOSED FORM: at round 0 label(x) = x, and the
+        // undirectedSimple adjacency has no loops or parallel
+        // edges, so node n's votes are exactly its (distinct)
+        // neighbor ids — every count is 1 and "most frequent, ties
+        // to the smallest label" degenerates to min(nbr). One
+        // map-side-combinable agg replaces the round's label join,
+        // |E|-row re-exchange and two-aggregate vote fold (r15
+        // same-session isolated 5-pass A/B at sf0.1: b28
+        // 6.61→3.82 s median / 5.12→3.22 min; bit-identical by the
+        // argument above and by the 3-SF oracle re-gate).
+        lab = adj.groupBy(col("node"))
+          .agg(min(col("nbr")).as("label"))
+          .barrier(false)
+      } else {
+        // one exchange per round: hashpartitioning(node) satisfies
+        // the (node, label) vote count's clustered distribution
+        // (subset key) AND the per-node min_by's, so both
+        // aggregates run exchange-free on the repartitioned join
+        // output. LAZY round barriers (r14, interleaved 4-rep A/B
+        // at sf0.1: lazy 5.86 s median, tight [5.40-6.09], vs eager
+        // 7.47 median with 4.95-8.26 spread, bit-identical labels):
+        // under AQE a lazy barrier runs the round's shuffle stage
+        // when it is built and leaves the round's last stage to the
+        // consumer's action. Lineage still truncates at every round,
+        // so the plan never deepens past one round.
+        lab = adj
+          .join(lab.select(col("node").as("nbr"), col("label")), "nbr")
+          .repartition(labelParts, col("node"))
+          .groupBy(col("node"), col("label")).agg(count(lit(1)).as("cnt"))
+          .groupBy(col("node"))
+          .agg(min_by(col("label"),
+            struct((-col("cnt")).as("nc"), col("label"))).as("label"))
+          .barrier(false)
       }
-      lab
     }
+    lab
   }
 }

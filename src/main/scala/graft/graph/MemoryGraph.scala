@@ -244,9 +244,7 @@ final class MemoryGraph(val nodes: DataFrame, val edges: DataFrame) {
     * instead of n sequential joins — the difference between 9 and 133
     * Spark jobs on the sf0.1 chains. Emits every traversed edge with
     * its (shortest) step number, matching the recursive-CTE oracle on
-    * the (single-path) invalidates chains. */
-  /** Multi-hop walk from `startId` over `etype` edges via pointer
-    * doubling (stride self-composition), O(log maxHops) rounds.
+    * the (single-path) invalidates chains.
     *
     * `edgeFilter` restricts the edge relation BEFORE doubling — the
     * doubling composes strides for every node in the relation, so a
@@ -419,57 +417,14 @@ final class MemoryGraph(val nodes: DataFrame, val edges: DataFrame) {
 object MemoryGraph {
 
   /** Bump when [[fromTables]]' node/edge derivation changes — the
-    * on-disk graph cache is keyed by this, so stale layouts from an
-    * older code version can never be read back. */
-  private val CacheVersion = "v2"
+    * on-disk graph cache and the views derived from it are keyed by
+    * this, so stale layouts from an older code version can never be
+    * read back. */
+  private val CacheVersion = "v3"
 
   /** The parquet tables [[fromTables]] derives the graph from. */
   private val SourceTables = Seq("customer", "supplier", "part", "orders",
     "lineitem", "documents", "events")
-
-  /** Content fingerprint of the graph's source inputs: the absolute
-    * dir plus every source parquet file's relative path, size and
-    * mtime. Keying the on-disk cache by this (not just the dir name)
-    * means regenerated source data invalidates the cache instead of
-    * silently serving a stale graph, and distinct dirs can never
-    * collide however their names mangle. */
-  private def fingerprint(dir: String): String = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val parts = SourceTables.flatMap { t =>
-      val p = Paths.get(dir, s"$t.parquet")
-      if (!Files.exists(p)) Seq(s"$t:absent")
-      else {
-        val walk = Files.walk(p)
-        try walk.iterator().asScala
-          .filter(Files.isRegularFile(_))
-          .map(f => s"${p.relativize(f)}:${Files.size(f)}:${
-            Files.getLastModifiedTime(f).toMillis}")
-          .toList.sorted
-        finally walk.close()
-      }
-    }
-    val md = java.security.MessageDigest.getInstance("SHA-1")
-    md.update((Paths.get(dir).toAbsolutePath.normalize.toString + "\n" +
-      parts.mkString("\n")).getBytes("UTF-8"))
-    md.digest().map("%02x".format(_)).mkString.take(16)
-  }
-
-  // weak keys: a stopped, dereferenced session's entries vanish with
-  // it — identity hashes could be reused by a new session and hand
-  // back DataFrames bound to the dead one
-  private val persistedGraphs = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, MemoryGraph]]()
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.iterator().asScala.toList.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
-    }
-  }
 
   /** The graph materialized ONCE per (session, sf dir) as parquet
     * partitioned by ntype/etype, then read back as pruned scans. This
@@ -479,49 +434,28 @@ object MemoryGraph {
     * of re-unioning 9 table scans per query. At cluster scale this is
     * the bucketed/partitioned table the graph would live in anyway.
     *
-    * Cross-process safe: the layout is written to a temp dir and
-    * atomically renamed into place, so concurrent JVMs (sbt test +
-    * Bench) either win the rename or read the winner's complete
-    * cache — never a half-written one. */
+    * A [[graft.util.DiskCache]] entry fingerprinted on the seven source
+    * tables, so regenerated data rebuilds it and concurrent JVMs (sbt
+    * test + Bench) read either their own or the winner's full copy. */
   def persisted(s: SparkSession, dir: String): MemoryGraph = {
-    val perSession = persistedGraphs.synchronized {
-      var m = persistedGraphs.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, MemoryGraph]
-        persistedGraphs.put(s, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate(dir, {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      val basePath = Paths.get(
-        sys.props("user.dir"), "target", "graph-cache", CacheVersion,
-        dir.replaceAll("[^A-Za-z0-9.]", "_") + "-" + fingerprint(dir))
-      val base = basePath.toString
-      def ready(sub: String) =
-        Files.exists(Paths.get(base, sub, "_SUCCESS"))
-      if (!ready("nodes") || !ready("edges")) {
-        val tmp = base + ".tmp-" +
-          java.util.UUID.randomUUID().toString.take(8)
-        val g = fromTables(s, dir)
-        g.nodes.write.mode("overwrite").partitionBy("ntype")
-          .parquet(s"$tmp/nodes")
-        g.edges.write.mode("overwrite").partitionBy("etype")
-          .parquet(s"$tmp/edges")
-        try Files.move(Paths.get(tmp), basePath, StandardCopyOption.ATOMIC_MOVE)
-        catch { case _: java.nio.file.FileSystemException =>
-          // lost the creation race: the winner's rename was atomic, so
-          // the existing cache is complete — drop ours and read theirs
-          deleteRecursively(Paths.get(tmp))
-        }
-      }
+    val sources = SourceTables.map(t =>
+      java.nio.file.Paths.get(dir, s"$t.parquet").toAbsolutePath
+        .normalize.toString)
+    graft.util.DiskCache.cached(s, "graph-cache", CacheVersion, sources,
+      dir, Seq("nodes", "edges")) { tmp =>
+      val g = fromTables(s, dir)
+      g.nodes.write.mode("overwrite").partitionBy("ntype")
+        .parquet(s"$tmp/nodes")
+      g.edges.write.mode("overwrite").partitionBy("etype")
+        .parquet(s"$tmp/edges")
+    } { base =>
       new MemoryGraph(
         s.read.parquet(s"$base/nodes")
           .select(col("id"), col("ntype"), col("content"), col("attr"),
             col("score")),
         s.read.parquet(s"$base/edges")
           .select(col("etype"), col("src"), col("dst"), col("prop")))
-    })
+    }
   }
 
   /** Undirected simple-graph edge view (a < b, loops dropped,

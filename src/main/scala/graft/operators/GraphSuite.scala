@@ -326,26 +326,24 @@ object GraphSuite extends Suite {
       // edge frame pre-partitioned on the per-iteration join key and
       // materialized ONCE; per-iteration score barriers are the b18
       // GraphIterAB winner applied here (same 3-round join/agg
-      // dataflow; same-session A/B in §8p addendum). r16: the whole
-      // loop runs at size-derived parallelism (one cheap edge count;
-      // see GraphAlgo.loopParts) instead of the static session width.
+      // dataflow; same-session A/B in §8p addendum). r16: the edge
+      // frame takes a size-derived width (GraphAlgo.loopParts).
       val eSrc = g.edges.select(col("src"), col("dst"))
-      graft.graph.GraphAlgo.withSizedLoop(s, eSrc.count()) {
-        val e = eSrc.repartition(col("src")).barrier(true)
-        var score = g.nodes.select(col("id").as("node"), lit(1L).as("score"))
-        (1 to 3).foreach { i =>
-          val contrib = e.join(score.hint("shuffle_hash"),
-              col("src") === col("node"))
-            .groupBy(col("dst")).agg(sum(col("score")).as("in_score"))
-          score = g.nodes.select(col("id").as("node"))
-            .join(contrib.hint("shuffle_hash"),
-              col("node") === col("dst"), "left")
-            .select(col("node"),
-              (lit(1L) + coalesce(col("in_score"), lit(0L))).as("score"))
-          if (i < 3) score = score.barrier(true)
-        }
-        score.orderBy(col("score").desc, col("node")).limit(25)
+      val n = graft.graph.GraphAlgo.joinLoopParts(s, eSrc.count())
+      val e = eSrc.repartition(n, col("src")).barrier(true)
+      var score = g.nodes.select(col("id").as("node"), lit(1L).as("score"))
+      (1 to 3).foreach { i =>
+        val contrib = e.join(score.hint("shuffle_hash"),
+            col("src") === col("node"))
+          .groupBy(col("dst")).agg(sum(col("score")).as("in_score"))
+        score = g.nodes.select(col("id").as("node"))
+          .join(contrib.hint("shuffle_hash"),
+            col("node") === col("dst"), "left")
+          .select(col("node"),
+            (lit(1L) + coalesce(col("in_score"), lit(0L))).as("score"))
+        if (i < 3) score = score.barrier(true)
       }
+      score.orderBy(col("score").desc, col("node")).limit(25)
     },
     Some(s"""
       WITH nodes AS ($N), e AS (SELECT src, dst FROM ($E) t),
@@ -561,30 +559,29 @@ object GraphSuite extends Suite {
       // edge frame pre-partitioned on the relaxation join key and
       // materialized once; per-round dist barriers (the b18/b15
       // GraphIterAB winner — same bounded-round join/agg dataflow).
-      // r16: size-derived loop parallelism (GraphAlgo.loopParts).
+      // r16: size-derived edge-frame width (GraphAlgo.loopParts).
       val eSrc = g.edges.select(col("src"), col("dst"),
         ((length(col("src")) * 3 + length(col("dst")) * 5) % 7 + 1)
           .cast("long").as("w"))
-      graft.graph.GraphAlgo.withSizedLoop(s, eSrc.count()) {
-        val e = eSrc.repartition(col("src")).barrier(true)
-        // seed from a LocalRelation so `node` is a genuine attribute:
-        // a lit() seed constant-folds into the first join's condition,
-        // which drops the equi-key and degrades it to a nested loop
-        var dist = s.createDataFrame(Seq(("evt:0", 0L)))
-          .toDF("node", "dist")
-        (1 to 4).foreach { i =>
-          val relaxed = e.join(dist.hint("shuffle_hash"),
-              col("src") === col("node"))
-            .select(col("dst").as("node2"), (col("dist") + col("w")).as("nd"))
-            .groupBy(col("node2")).agg(min(col("nd")).as("nd"))
-          dist = dist.join(relaxed, col("node") === col("node2"), "full_outer")
-            .select(coalesce(col("node"), col("node2")).as("node"),
-              least(coalesce(col("dist"), lit(inf)),
-                coalesce(col("nd"), lit(inf))).as("dist"))
-          if (i < 4) dist = dist.barrier(true)
-        }
-        dist.orderBy(col("dist"), col("node")).limit(25)
+      val n = graft.graph.GraphAlgo.joinLoopParts(s, eSrc.count())
+      val e = eSrc.repartition(n, col("src")).barrier(true)
+      // seed from a LocalRelation so `node` is a genuine attribute:
+      // a lit() seed constant-folds into the first join's condition,
+      // which drops the equi-key and degrades it to a nested loop
+      var dist = s.createDataFrame(Seq(("evt:0", 0L)))
+        .toDF("node", "dist")
+      (1 to 4).foreach { i =>
+        val relaxed = e.join(dist.hint("shuffle_hash"),
+            col("src") === col("node"))
+          .select(col("dst").as("node2"), (col("dist") + col("w")).as("nd"))
+          .groupBy(col("node2")).agg(min(col("nd")).as("nd"))
+        dist = dist.join(relaxed, col("node") === col("node2"), "full_outer")
+          .select(coalesce(col("node"), col("node2")).as("node"),
+            least(coalesce(col("dist"), lit(inf)),
+              coalesce(col("nd"), lit(inf))).as("dist"))
+        if (i < 4) dist = dist.barrier(true)
       }
+      dist.orderBy(col("dist"), col("node")).limit(25)
     },
     Some {
       val inf = Long.MaxValue

@@ -34,12 +34,19 @@ object Barriers {
     java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 
   /** Materialize `df` and truncate its lineage, to local executor
-    * blocks (default) or to the reliable checkpoint dir (see above). */
+    * blocks (default) or to the reliable checkpoint dir (see above).
+    *
+    * Keeps `df`'s hash partitioning under AQE, as Spark's checkpoint
+    * does without it (under AQE it reports none, since the final stage
+    * may read through AQE's coalescing): when the final stage has no
+    * AQE shuffle read, its partitioning is the non-adaptive planner's.
+    * So a loop's frames, repartitioned by their join key before the
+    * barrier, stay co-partitioned from round to round. */
   def barrier(df: DataFrame, eager: Boolean = true): DataFrame = {
     val s = df.sparkSession
     val reliable = s.conf
       .getOption("spark.graft.checkpoint.reliable").contains("true")
-    val out =
+    val cp =
       if (!reliable) df.localCheckpoint(eager)
       else {
         if (s.sparkContext.getCheckpointDir.isEmpty) {
@@ -49,12 +56,41 @@ object Barriers {
         }
         df.checkpoint(eager)
       }
+    val out = withFinalPartitioning(df, cp)
     out.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         owned.add(lr.rdd.id)
       case _ => () // defensive: checkpoint always yields a LogicalRDD
     }
     out
+  }
+
+  private def withFinalPartitioning(df: DataFrame,
+                                    cp: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap}
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, PartitioningCollection}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec}
+    (df.queryExecution.executedPlan, cp.queryExecution.analyzed) match {
+      case (a: AdaptiveSparkPlanExec, lr: LogicalRDD) if a.isFinalPlan &&
+          !a.executedPlan.exists(_.isInstanceOf[AQEShuffleReadExec]) =>
+        val part = a.executedPlan.outputPartitioning match {
+          case PartitioningCollection(ps) => ps.head
+          case p => p
+        }
+        part match {
+          case h: HashPartitioning
+              if h.numPartitions == lr.rdd.getNumPartitions &&
+                h.references.subsetOf(a.outputSet) =>
+            val byPos = AttributeMap(a.output.zip(lr.output))
+            val onCp = h.transform { case at: Attribute => byPos(at) }
+            org.apache.spark.sql.graft.ColumnBridge.ofRows(cp.sparkSession,
+              lr.makeCopy(Array(lr.output, lr.rdd, onCp, lr.outputOrdering,
+                Boolean.box(lr.isStreaming), lr.stream)))
+          case _ => cp
+        }
+      case _ => cp
+    }
   }
 
   /** RDD ids whose blocks are SESSION-scoped (a memoized semantic

@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * partitioned the way downstream joins want it, and serve every
   * later session from disk.
   *
-  * Safety properties (same as the graph cache):
+  * Safety properties:
   *   - fingerprint = source file names + sizes + mtimes → a
   *     regenerated corpus never serves a stale index;
   *   - creation writes to a tmp dir and atomic-renames into place →
@@ -60,8 +60,7 @@ object DiskCache {
     * carries (r15-advice low): the parameters that went into the
     * build, written at build time and VALIDATED on every read — a
     * reused tag with different params now fails loudly at the seam
-    * instead of silently serving the wrong artifact. The manifest is
-    * also the artifact-store audit's (c118) data source. */
+    * instead of silently serving the wrong artifact. */
   private def paramsJson(kind: String, version: String, tag: String,
                          fp: String, sources: Seq[String],
                          params: Seq[(String, String)]): String = {
@@ -165,44 +164,5 @@ object DiskCache {
       }
       read(base)
     }).asInstanceOf[T]
-  }
-
-  /** Every manifest in the artifact store under `target/` — one row
-    * per at-rest cache entry (the c118 audit's scan surface). Returns
-    * (kind, version, dirName, manifestJson, bytes, fileCount,
-    * newestFileMtimeMs). */
-  def scanStore(): Seq[(String, String, String, String, Long, Long, Long)] = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get(sys.props("user.dir"), "target")
-    if (!Files.isDirectory(root)) return Nil
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(String, String, String, String, Long, Long, Long)]
-    val kinds = Files.list(root)
-    try kinds.iterator().asScala.filter(Files.isDirectory(_)).foreach { kd =>
-      val versions = Files.list(kd)
-      try versions.iterator().asScala.filter(Files.isDirectory(_)).foreach { vd =>
-        val entries = Files.list(vd)
-        try entries.iterator().asScala.filter(Files.isDirectory(_)).foreach { ed =>
-          val mf = ed.resolve("_graft_manifest.json")
-          if (Files.exists(mf)) {
-            var bytes = 0L; var files = 0L; var newest = 0L
-            val walk = Files.walk(ed)
-            try walk.iterator().asScala
-              .filter(Files.isRegularFile(_)).foreach { f =>
-                bytes += Files.size(f); files += 1
-                newest = math.max(newest,
-                  Files.getLastModifiedTime(f).toMillis)
-              }
-            finally walk.close()
-            out += ((kd.getFileName.toString, vd.getFileName.toString,
-              ed.getFileName.toString,
-              new String(Files.readAllBytes(mf), "UTF-8"),
-              bytes, files, newest))
-          }
-        } finally entries.close()
-      } finally versions.close()
-    } finally kinds.close()
-    out.toSeq
   }
 }

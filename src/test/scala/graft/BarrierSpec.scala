@@ -177,4 +177,29 @@ class BarrierSpec extends SparkSpec {
     assert(d1 === d2)
     assert(k1 === k2)
   }
+
+  test("a barrier keeps its frame's hash partitioning under AQE " +
+    "unless the final stage reads through an AQE shuffle read") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import graft.util.Barriers.BarrierOps
+    val base = spark.range(20000).select(($"id" % 1000).as("k"), $"id")
+    def part(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.outputPartitioning
+    val kept = base.repartition(3, $"k").barrier(true)
+    assert(part(kept) match {
+      case h: HashPartitioning =>
+        h.numPartitions == 3 && h.references.map(_.name).toSet == Set("k")
+      case _ => false
+    }, part(kept))
+    // AQE coalesces this tiny aggregate's shuffle read: nothing is kept
+    assert(!part(base.groupBy($"k").count().barrier(true))
+      .isInstanceOf[HashPartitioning])
+    // a join on the key over two kept frames gives the unbarriered rows
+    val other = base.select($"k", ($"id" * 2).as("v")).repartition(3, $"k")
+    def joined(l: org.apache.spark.sql.DataFrame,
+               r: org.apache.spark.sql.DataFrame) =
+      l.join(r.hint("shuffle_hash"), "k")
+        .agg(count(lit(1)), sum($"v"), sum($"id")).head()
+    assert(joined(kept, other.barrier(true)) === joined(base, other))
+  }
 }

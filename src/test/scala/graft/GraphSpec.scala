@@ -98,6 +98,49 @@ class GraphSpec extends SparkSpec {
     assert(w.size === 511)
   }
 
+  test("connectedComponents: a round's window exchanges keep the " +
+    "loopParts width under AQE and are never coalesced") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive._
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM,
+      ShuffleExchangeExec}
+    import graft.graph.GraphAlgo
+    // 400 chains of 100 nodes: 2|E| = 79,200 rows per round
+    val edges = spark.range(40000).where(col("id") % 100 =!= 99)
+      .select(col("id").as("src"), (col("id") + 1).as("dst"))
+    val n = GraphAlgo.loopParts(2L * edges.count(),
+      spark.sessionState.conf.numShufflePartitions,
+      GraphAlgo.SortLoopRowsPerTask)
+    assert(n > 1)
+    def all(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => all(a.executedPlan)
+      case q: QueryStageExec => all(q.plan)
+      case _ => p.children.flatMap(all)
+    })
+    def byNum(p: SparkPlan) = all(p).collect {
+      case s: ShuffleExchangeExec if s.shuffleOrigin == REPARTITION_BY_NUM => s
+    }
+    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (byNum(qe.executedPlan).nonEmpty) plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // the listener bus delivers the round's plan after the action
+    val round = try {
+      GraphAlgo.connectedComponents(edges, maxIter = 1).count()
+      plans.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+    } finally spark.listenerManager.unregister(listener)
+    assert(round != null, "no CC round plan was captured")
+    // large-star's window on c and small-star's window on u
+    assert(byNum(round).map(_.outputPartitioning.numPartitions) === Seq(n, n))
+    val readOrigins = all(round).collect { case r: AQEShuffleReadExec =>
+      r.child }.collect { case q: ShuffleQueryStageExec => q.shuffle.shuffleOrigin }
+    assert(!readOrigins.contains(REPARTITION_BY_NUM),
+      s"a window exchange was read through an AQE shuffle read:\n$round")
+  }
+
   test("recentContext: newest-first per-section heads with the " +
       "reference's 5/3/5 limits") {
     val rows = g.recentContext().collect()

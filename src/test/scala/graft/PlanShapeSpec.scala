@@ -333,7 +333,7 @@ class PlanShapeSpec extends SparkSpec {
     val weighted = e.join(od, "src")
     val rank = nodes.select($"node".as("id"), lit(1000000000000L).as("r"))
     val step = graft.graph.GraphAlgo
-      .pageRankStep(weighted, nodes, rank, 85, 150000000000L)
+      .pageRankStep(weighted, nodes, rank, 85, 150000000000L, 4)
     val plan = step.queryExecution.executedPlan.toString
     assert(!plan.contains("collect_list"),
       s"pageRank step must not materialize per-dst arrays:\n$plan")
