@@ -63,8 +63,8 @@ object Bench {
     // pressure as 2-4x in-suite medians over their own isolated
     // minima. Each query's transient blocks are garbage once its noop
     // sink returns (queries build from raw tables + at-rest
-    // artifacts, never from another query's frames); pinned
-    // session-scoped frames (the semantic index) survive the sweep.
+    // artifacts, never from another query's frames), so the sweep
+    // frees every barrier block the query left.
     // SPARK_GRAFT_SWEEP=0 turns it off for A/B measurement.
     val sweep = !sys.env.get("SPARK_GRAFT_SWEEP").contains("0")
     for (pass <- 1 to runs; (name, fn) <- selected if !failedQ(name)) {

@@ -20,9 +20,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // query-boundary hygiene: this query's transient barrier blocks
-      // are garbage once its output is on disk (pinned session frames
-      // survive) — without the sweep, 223 queries' worth accumulate
+      // query-boundary hygiene: this query's barrier blocks are
+      // garbage once its output is on disk, so the sweep frees them
+      // all — without it, 223 queries' worth accumulate
       graft.util.Barriers.sweepTransient(spark.sparkContext)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -206,9 +206,6 @@ object TextOps {
   def tokenHashes(text: Column): Column =
     transform(array_distinct(tokens(text)), t => polyHash(t))
 
-  def tokenHashesSql(t: String): String =
-    s"""list_transform(list_distinct(${tokensSql(t)}), tok -> ${polyHashSql("tok")})"""
-
   private object VectorOpsInternal {
     def foldSumLong(v: Column): Column =
       aggregate(v, lit(0L), (acc, x) => acc + x)

@@ -459,26 +459,12 @@ object GraphAlgo {
     nodeSimilarityUnd(undirected(edgesIn), maxCenterDeg, topN)
 
   /** [[nodeSimilarity]] over a pre-built [[undirectedSimple]] view.
-    * Dispatches to [[nodeSimilarityApproxUnd]] when
-    * `spark.graft.approx.nodesim=true` (opt-in, same contract as
-    * `spark.graft.approx.simjoin`): the exact wedge join stays the
-    * default and the oracle — MEASURED FASTER at this graph size
-    * (round-8 regenerated sf0.1, interleaved A/B in SURVEY §8: exact
-    * 12.7 s vs approx 27.7 s median; 4.5 s after the
-    * degree-carrying rewrite below): with
-    * bounded degrees the wedge intermediate is D·|E|-flat and the
-    * top-similar pairs are identical-neighborhood leaf siblings that
-    * banding cannot prune (identical signatures collide by design).
-    * The approximate path trades bounded recall loss in CANDIDATE
-    * GENERATION (scores of returned pairs stay exact, top-20 recall
-    * 1.0 at sf0.1 — ApproxNodeSimSpec) for k·|E|-linear scaling in
-    * the opposite regime: large diverse neighborhoods where
-    * Σ_{deg≤D} deg² ≫ k·|E|. */
+    * Exact: with bounded degrees the wedge intermediate is D·|E|-flat.
+    * A MinHash-banded candidate path measured slower at sf0.1 (27.7 s
+    * vs 12.7 s, SURVEY §8): the most similar pairs are leaf siblings
+    * with identical neighborhoods, which banding cannot prune. */
   def nodeSimilarityUnd(und0: DataFrame, maxCenterDeg: Int,
                         topN: Int): DataFrame = {
-    if (und0.sparkSession.conf
-        .getOption("spark.graft.approx.nodesim").contains("true"))
-      return nodeSimilarityApproxUnd(und0, maxCenterDeg, topN)
     // r17: no re-barrier of the input (the old barrier(true) copied
     // |E| rows per invocation). The view feeds three consumers
     // (degrees, both wedge sides), so the caller must hand in a
@@ -491,8 +477,8 @@ object GraphAlgo {
     // the NEIGHBOR's degree rides the adjacency INTO the wedge join
     // and out through the pair aggregation as max(dp)/max(dq) —
     // functionally dependent on the group key, so max is just "the"
-    // value — which deletes the two pair-table degree joins
-    // scoreCommon would pay: at sf0.1 that was 2 × 12.5M-row shuffles
+    // value — which deletes two pair-table degree joins: at sf0.1
+    // joining degrees onto the pairs was 2 × 12.5M-row shuffles
     // for a 1.9M-row join instead (SizeProbe A/B: cold 15.2 s → 6.4 s,
     // warm parity).
     // r17: BOTH endpoint degrees attach at the EDGE level (|E| rows,
@@ -538,108 +524,6 @@ object GraphAlgo {
           .as("jaccard"))
       .orderBy(col("jaccard").desc, col("p"), col("q"))
       .limit(topN)
-  }
-
-  /** Shared scoring tail: exact Jaccard from common-neighbor counts +
-    * UNcapped degrees, global top-`topN` via TakeOrderedAndProject. */
-  private def scoreCommon(common: DataFrame, deg: DataFrame,
-                          topN: Int): DataFrame =
-    common
-      .join(deg.select(col("node").as("p"), col("deg").as("dp"))
-        .hint("shuffle_hash"), Seq("p"))
-      .join(deg.select(col("node").as("q"), col("deg").as("dq"))
-        .hint("shuffle_hash"), Seq("q"))
-      .select(col("p"), col("q"), col("n_common"),
-        round(col("n_common").cast("double")
-          / (col("dp") + col("dq") - col("n_common")).cast("double"), 6)
-          .as("jaccard"))
-      .orderBy(col("jaccard").desc, col("p"), col("q"))
-      .limit(topN)
-
-  /** MinHash-of-neighborhoods node similarity — the conf-gated
-    * scale path behind [[nodeSimilarityUnd]] (the r6-verdict b25
-    * lever). Semantics preserved exactly except candidate RECALL:
-    * each node's CAPPED neighborhood (members with deg ≤
-    * `maxCenterDeg`, i.e. the same centers the wedge join counts) is
-    * MinHash-signed with `k` affine permutations and banded into
-    * `bands` buckets; only band-colliding pairs are verified — and
-    * the verify recomputes the EXACT common-center count and Jaccard
-    * (capped intersection / uncapped degrees), so any returned pair
-    * scores identically to the exact operator; only pairs whose
-    * bands never collide can be missed (P(miss) = (1−J²)^bands at
-    * r=2 rows/band — 1e-8 at J=0.5, measured 100% top-20 recall in
-    * ApproxNodeSimSpec). See [[nodeSimilarityUnd]] for the measured
-    * verdict: at THIS graph's bounded-degree shape
-    * the exact wedge join is ~3× faster, so this path is opt-in.
-    *
-    * Scale shape vs the wedge join: signatures build from a k-way
-    * posexplode of the (node, member) edge list — k·|E| rows into a
-    * map-side-combinable (node, kk) min agg, LINEAR in edges, no
-    * per-node array materialization (a hub's neighborhood never
-    * collects into one row); candidates come from a banded equi-join
-    * (shuffle bounded by collisions); the verify touches candidate
-    * pairs only. The wedge join's D·|E| intermediate disappears
-    * entirely — the trade a 1000×-denser graph forces. */
-  def nodeSimilarityApproxUnd(und0: DataFrame, maxCenterDeg: Int,
-                              topN: Int, k: Int = 32,
-                              bands: Int = 16): DataFrame = {
-    require(k % bands == 0,
-      s"k=$k must be a multiple of bands=$bands — a remainder would " +
-        "leave a signature tail no band covers, silently degrading " +
-        "recall below the documented (1-(1-J^r)^bands) bound")
-    val P = 1000000007L // the TextOps MinHash modulus
-    val rows = k / bands
-    val und = und0 // pre-materialized by the *Und contract (see kCoreUnd)
-    val deg = undDegrees(und).barrier(true)
-    val adj = und.select(col("a").as("node"), col("b").as("nb"))
-      .unionAll(und.select(col("b").as("node"), col("a").as("nb")))
-    val centers = deg.where(col("deg") <= maxCenterDeg).select(col("node"))
-    val cadj = adj.join(centers.hint("shuffle_hash"), Seq("node"), "left_semi")
-    // (node, m): m is a CAPPED member of node's neighborhood — the
-    // reversed wedge-center adjacency, barriered once for the three
-    // consumers (signature build + both verify sides)
-    val memb = cadj.select(col("nb").as("node"), col("node").as("m"))
-      .barrier(true)
-    // member ids hash to Z_P (xxhash64 handles any id type — node
-    // ids are strings here), then k affine permutations of the hash;
-    // min per (node, kk) aggregates map-side, then the signature
-    // reassembles ordered
-    val sigs = memb
-      .select(col("node"), pmod(xxhash64(col("m")), lit(P)).as("h"))
-      .select(col("node"), posexplode(
-        transform(sequence(lit(1), lit(k)), kk =>
-          ((kk.cast("long") * 2L + 1L) * col("h")
-            + lit(12345L) + kk.cast("long") * 7L) % lit(P)))
-        .as(Seq("kk", "v")))
-      .groupBy(col("node"), col("kk")).agg(min(col("v")).as("mv"))
-      .groupBy(col("node"))
-      .agg(transform(sort_array(collect_list(struct(col("kk"), col("mv")))),
-        s => s.getField("mv")).as("sig"))
-      .barrier(true)
-    val banded = sigs.select(col("node"), col("sig"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => slice(col("sig"), b * rows + 1, lit(rows))))
-        .as(Seq("band_idx", "band_val")))
-    // each pair emits from its FIRST colliding band only (no earlier
-    // band equal — the exists() probe is O(bands) per match), which
-    // replaces the candidate distinct's full shuffle: neighborhoods
-    // here are often IDENTICAL (leaf siblings of one center), and an
-    // identical pair would otherwise surface from all `bands` bands
-    val noEarlier = !exists(sequence(lit(0), col("x.band_idx") - 1),
-      j => slice(col("x.sig"), j * rows + 1, lit(rows)) ===
-        slice(col("y.sig"), j * rows + 1, lit(rows)))
-    val cand = banded.alias("x")
-      .join(banded.alias("y"),
-        col("x.band_idx") === col("y.band_idx") &&
-          col("x.band_val") === col("y.band_val") &&
-          col("x.node") < col("y.node") &&
-          (col("x.band_idx") === 0 || noEarlier))
-      .select(col("x.node").as("p"), col("y.node").as("q"))
-    val common = cand
-      .join(memb.select(col("node").as("p"), col("m")), Seq("p"))
-      .join(memb.select(col("node").as("q"), col("m")), Seq("q", "m"))
-      .groupBy(col("p"), col("q")).agg(count(lit(1)).as("n_common"))
-    scoreCommon(common, deg, topN)
   }
 
   /** Synchronous label-propagation communities (Raghavan et al. 2007)

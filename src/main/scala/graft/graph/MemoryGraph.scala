@@ -90,101 +90,24 @@ final class MemoryGraph(val nodes: DataFrame, val edges: DataFrame) {
     * bounded-heap TopKPerKey by the optimizer rule), and the per-type
     * heads are merged and re-ranked globally by similarity.
     *
-    * Two physical modes (the exactness/scale trade the reference
-    * makes with its HNSW index, made explicit like
-    * `spark.graft.approx.simjoin`):
-    *   - default: EXACT — one scan of the pruned ntype partitions, no
-    *     shuffle beyond the per-type top-k. Linear per query; the
-    *     oracle path.
-    *   - `spark.graft.approx.semantic=true`: IVF probe over the
-    *     once-per-graph [[semanticIndex]] — the query ranks the k
-    *     centroids, probes the `spark.graft.semantic.nprobe`
-    *     (default 4) nearest inverted lists, and scans only those
-    *     candidates: sublinear per query like the reference's indexed
-    *     per-type search, recall < 1 by construction (measured in
-    *     ApproxSemanticSpec). */
+    * Exact: one scan of the pruned ntype partitions, no shuffle beyond
+    * the per-type top-k, linear per query. */
   def semanticSearch(queryText: String, ntypes: Seq[String], perType: Int,
                      k: Int, dim: Int = 16): DataFrame = {
     import graft.functions.{TextOps, VectorOps}
     def emb(c: Column) = transform(
       VectorOps.mockEmbedding(TextOps.polyHash(c), dim), _.cast("float"))
-    val conf = nodes.sparkSession.conf
-    val approx = conf.getOption("spark.graft.approx.semantic").contains("true")
-    val qEmb = emb(lit(queryText))
-    val scored =
-      if (!approx)
-        nodes.where(col("ntype").isin(ntypes: _*))
-          .withColumn("emb", emb(col("content")))
-          .withColumn("sim", VectorOps.cosine6(col("emb"), qEmb))
-      else {
-        val nprobe = conf.getOption("spark.graft.semantic.nprobe")
-          .map(_.toInt).getOrElse(4)
-        val (cents, assigned) = semanticIndex(dim)
-        // rank the (tiny, broadcast) centroid table against the query,
-        // keep the nprobe nearest inverted lists
-        val probes = broadcast(cents
-          .withColumn("qs", VectorOps.cosine6Pre(col("cv"), qEmb,
-            col("cn"), VectorOps.norm(qEmb)))
-          .orderBy(col("qs").desc, col("cid"))
-          .limit(nprobe)
-          .select(col("cid")))
-        assigned.join(probes, "cid")
-          .where(col("ntype").isin(ntypes: _*))
-          .withColumn("sim", VectorOps.cosine6Pre(col("emb"), qEmb,
-            col("nrm"), VectorOps.norm(qEmb)))
-      }
     val w = Window.partitionBy(col("ntype"))
       .orderBy(col("sim").desc, col("id"))
-    scored
+    nodes.where(col("ntype").isin(ntypes: _*))
+      .withColumn("emb", emb(col("content")))
+      .withColumn("sim", VectorOps.cosine6(col("emb"), emb(lit(queryText))))
       .withColumn("rk", row_number().over(w))
       .where(col("rk") <= perType)
       .orderBy(col("sim").desc, col("id"))
       .limit(k)
       .select(col("ntype"), col("id"), col("sim"))
   }
-
-  /** IVF index over every node's content embedding — the Spark
-    * analogue of the reference's per-type HNSW index tables
-    * (schema.go's HNSW indexes; reader.go:38-119 queries them instead
-    * of scanning). Built ONCE per MemoryGraph instance (and
-    * [[MemoryGraph.persisted]] instances are cached per (session,
-    * dir), so per session in practice): k-means centroids over the
-    * embeddings plus the per-node nearest-centroid assignment (the
-    * inverted lists), both materialized behind barriers. At cluster
-    * scale the assignment would persist next to the graph layout,
-    * partitioned by cid — queries then prune to nprobe list
-    * partitions exactly like the etype-partitioned edge scans. */
-  @transient private lazy val semanticIndexes =
-    scala.collection.concurrent.TrieMap.empty[Int, (DataFrame, DataFrame)]
-
-  private def semanticIndex(dim: Int): (DataFrame, DataFrame) =
-    semanticIndexes.getOrElseUpdate(dim, {
-      import graft.functions.{TextOps, VectorOps}
-      import graft.util.Barriers.BarrierOps
-      // memoized across queries → PINNED: the harness' query-boundary
-      // sweep must not free blocks later probes will re-scan
-      val emb = graft.util.Barriers.pin(
-        nodes.select(col("id"), col("ntype"),
-        transform(VectorOps.mockEmbedding(TextOps.polyHash(col("content")),
-          dim), _.cast("float")).as("emb")).barrier(true))
-      val cents = graft.util.Barriers.pin(graft.operators.Ann
-        .kmeansFit(emb, "id", "emb", k = 16, iters = 2)
-        .select(col("id").as("cid"), col("emb").as("cv"),
-          VectorOps.norm(col("emb")).as("cn")).barrier(true))
-      // one corpus pass against the broadcast centroids = the
-      // inverted lists; norms stored so probes pay only the dot
-      val w = Window.partitionBy(col("id"))
-        .orderBy(col("cs").desc, col("cid"))
-      val assigned = emb.crossJoin(broadcast(cents))
-        .withColumn("nrm", VectorOps.norm(col("emb")))
-        .withColumn("cs", VectorOps.cosine6Pre(col("emb"), col("cv"),
-          col("nrm"), col("cn")))
-        .withColumn("rk", row_number().over(w))
-        .where(col("rk") === 1)
-        .select(col("id"), col("ntype"), col("emb"), col("nrm"), col("cid"))
-        .barrier(true)
-      (cents, graft.util.Barriers.pin(assigned))
-    })
 
   /** Batch ingestion (batcher.go:19-188 / bulk_store.go): append a
     * whole DataFrame of nodes and/or edges in ONE union each — the

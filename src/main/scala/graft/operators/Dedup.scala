@@ -1549,75 +1549,6 @@ object Dedup {
       .withColumnRenamed("did", id)
   }
 
-  /** Cosine similarity self-join with a conf-selected physical
-    * strategy — the exactness/scale trade made explicit, like AQE's
-    * join-strategy switches:
-    *
-    *   - default: the exact triangle-blocked equi-join
-    *     ([[embeddingPairs]]) — every pair with cosine >= tau,
-    *     O(n²) compute split into bounded tasks;
-    *   - `spark.graft.approx.simjoin=true`: MULTI-PROBE sign-pattern
-    *     LSH candidates + exact cosine verify — one side claims its
-    *     exact band patterns, the other also probes every 1-bit
-    *     neighbor pattern, so a pair is a candidate when any band
-    *     differs by at most one sign bit. At low thresholds this is
-    *     the difference between usable and useless recall: with
-    *     16 bits / 4-bit bands at tau=0.40 (bit agreement ~0.63),
-    *     exact banding catches ~50% of true pairs, 1-bit probing
-    *     ~95% (measured in ApproxSimJoinSpec), for (bandBits+1)x
-    *     probe-side rows — the standard multi-probe LSH trade (probe
-    *     more buckets instead of building more tables). Shuffle stays
-    *     bounded by candidate pairs; the trade the reference makes
-    *     with its HNSW k-NN probe (conflicts.go:85-96).
-    *
-    * Both modes emit the same schema with exact similarities;
-    * approximate mode can only MISS pairs, never fabricate them. */
-  def similarityJoin(emb: DataFrame, id: String, vec: String, tau: Double,
-                     bits: Int = 16, bandBits: Int = 4): DataFrame = {
-    val approx = emb.sparkSession.conf
-      .getOption("spark.graft.approx.simjoin").contains("true")
-    if (!approx) embeddingPairs(emb, id, vec, tau)
-    else {
-      val withNorm = emb.select(col(id).as("did"), col(vec).as("v"),
-        VectorOps.norm(col(vec)).as("nrm")).barrier(true)
-      // band b = bits/bandBits sign-pattern slices; the claim side
-      // registers its exact (band index, band value) buckets
-      val bands = bits / bandBits
-      val banded = withNorm.select(col("did"), col("v"), col("nrm"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)), b =>
-          aggregate(
-            transform(sequence(lit(1), lit(bandBits)), j =>
-              when(element_at(col("v"), b * bandBits + j) >= 0f,
-                pow(lit(2.0), j - 1).cast("long")).otherwise(0L)),
-            lit(0L), (acc, x) => acc + x)))
-          .as(Seq("band_idx", "band_val")))
-      // the probe side also visits each band's 1-bit-flip neighbors:
-      // a's exact pattern equals one of b's probes iff the band
-      // patterns differ by <= 1 bit, so emitting probes on ONE side
-      // covers every such pair exactly once (a.did < b.did)
-      val probed = banded.select(col("did"), col("v"), col("nrm"),
-        col("band_idx"),
-        explode(concat(array(col("band_val")),
-          transform(sequence(lit(0), lit(bandBits - 1)), j =>
-            col("band_val").bitwiseXOR(pow(lit(2.0), j).cast("long")))))
-          .as("band_val"))
-      val cand = banded.alias("a")
-        .join(probed.alias("b"),
-          col("a.band_idx") === col("b.band_idx") &&
-            col("a.band_val") === col("b.band_val") &&
-            col("a.did") < col("b.did"))
-        .select(col("a.did").as("id_a"), col("b.did").as("id_b"),
-          col("a.v").as("va"), col("b.v").as("vb"),
-          col("a.nrm").as("na"), col("b.nrm").as("nb"))
-        .distinct()
-      cand
-        .withColumn("sim",
-          VectorOps.cosine6Pre(col("va"), col("vb"), col("na"), col("nb")))
-        .where(col("sim") >= tau)
-        .select(col("id_a"), col("id_b"), col("sim"))
-    }
-  }
-
   /** A persisted (or persistable) dedup index of an already-ingested
     * corpus: `shingles` = (did, shh: array<long>, n) — the per-doc
     * distinct-shingle hash set and its size; `bands` = (did,

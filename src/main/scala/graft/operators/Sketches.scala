@@ -56,9 +56,6 @@ object Sketches {
   def cmBucket(i: Int, h: Column): Column =
     ((h * lit(CmA(i)) + lit(CmB(i))) % lit(TextOps.P)) % lit(CmW.toLong)
 
-  def cmBucketSql(i: Int, h: String): String =
-    s"((($h) * ${CmA(i)} + ${CmB(i)}) % ${TextOps.P}) % $CmW"
-
   /** The (i, bucket) pairs of a hash column as an exploded array —
     * the map side of the sketch build and of a point probe. */
   def cmPairs(h: Column): Column =

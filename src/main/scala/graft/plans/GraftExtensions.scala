@@ -17,7 +17,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
     ext.injectOptimizerRule(_ => RowNumberTopKRewrite)
-    ext.injectOptimizerRule(_ => ApproxSimJoinRewrite)
     ext.injectResolutionRule(_ => DeduplicateTopKRanks)
 
     ext.injectFunction((

@@ -93,25 +93,7 @@ object Barriers {
     }
   }
 
-  /** RDD ids whose blocks are SESSION-scoped (a memoized semantic
-    * index, any frame served across queries): [[sweepTransient]]
-    * must never free them, because their consumers re-scan them
-    * query after query and the truncated lineage cannot recompute. */
-  private val pinnedIds =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-
-  /** Mark a [[barrier]]-produced frame as session-scoped: its blocks
-    * survive [[sweepTransient]]. No-op for non-barrier frames. */
-  def pin(df: DataFrame): DataFrame = {
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        pinnedIds.add(lr.rdd.id)
-      case _ => ()
-    }
-    df
-  }
-
-  /** Free every owned, unpinned barrier block — the QUERY-BOUNDARY
+  /** Free every owned barrier block — the QUERY-BOUNDARY
     * sweep (r15-verdict #1). A round-robin pass over the full 223-
     * query inventory accumulates every query's localCheckpoint blocks
     * in executor storage until ContextCleaner gets to them at GC
@@ -122,20 +104,19 @@ object Barriers {
     * CONSTRUCTION — each query builds its plan from the raw tables
     * and at-rest artifacts, never from a previous query's frames —
     * so the harness frees them eagerly between queries (untimed),
-    * exactly what a per-query session would have done. Session-scoped
-    * frames are [[pin]]ned and skipped. Blocks already gone (GC'd,
-    * evicted, never materialized) are skipped harmlessly. */
+    * exactly what a per-query session would have done. Every owned
+    * block is freed, so no barrier frame may be scanned after the
+    * sweep. Blocks already gone (GC'd, evicted, never materialized)
+    * are skipped harmlessly. */
   def sweepTransient(sc: org.apache.spark.SparkContext): Int = {
     val persistent = sc.getPersistentRDDs
     var n = 0
     val it = owned.iterator()
     while (it.hasNext) {
       val id = it.next()
-      if (!pinnedIds.contains(id)) {
-        persistent.get(id).foreach { r =>
-          r.unpersist(blocking = false); n += 1 }
-        it.remove()
-      }
+      persistent.get(id).foreach { r =>
+        r.unpersist(blocking = false); n += 1 }
+      it.remove()
     }
     n
   }

@@ -2,7 +2,7 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** Build-once / read-back parquet caches keyed by a content
+/** Build-once / read-back parquet caches keyed by a metadata
   * fingerprint of their source files — the layout pattern behind
   * [[graft.graph.MemoryGraph.persisted]] and the dedup index: derive
   * an expensive artifact from raw tables ONCE, persist it
@@ -10,8 +10,11 @@ import org.apache.spark.sql.SparkSession
   * later session from disk.
   *
   * Safety properties:
-  *   - fingerprint = source file names + sizes + mtimes → a
-  *     regenerated corpus never serves a stale index;
+  *   - fingerprint = source file names + sizes + mtimes, never their
+  *     contents → a regenerated corpus (new sizes or mtimes) never
+  *     serves a stale index. The limit: a rewrite that keeps every
+  *     file's size and mtime is not detected and serves the old
+  *     entry (pinned in BarrierSpec);
   *   - creation writes to a tmp dir and atomic-renames into place →
   *     no torn reads, and a lost creation race falls back to the
   *     winner's complete copy;
@@ -23,7 +26,10 @@ object DiskCache {
   private val memo = new java.util.WeakHashMap[SparkSession,
     scala.collection.concurrent.TrieMap[String, Any]]()
 
-  /** Content fingerprint of a set of source files/directories. */
+  /** Metadata fingerprint of a set of source files/directories: the
+    * relative name, size and mtime of every regular file under each
+    * source. Contents are not read, so a same-size rewrite with the
+    * mtime restored keeps the fingerprint. */
   def fingerprint(sources: Seq[String]): String = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._

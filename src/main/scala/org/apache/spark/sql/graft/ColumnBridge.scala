@@ -27,9 +27,4 @@ object ColumnBridge {
   def logicalPlan(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan
-
-  /** The type's interpreted total order (what ORDER BY / min_by use)
-    * — TypeUtils is sql-private, so the reach-through lives here. */
-  def orderingFor(dt: org.apache.spark.sql.types.DataType): Ordering[Any] =
-    org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
 }

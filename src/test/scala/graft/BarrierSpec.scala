@@ -102,14 +102,11 @@ class BarrierSpec extends SparkSpec {
     assert(e.getMessage.contains("no complete winner"))
   }
 
-  test("sweepTransient frees unpinned barrier blocks; pinned frames " +
-      "survive and stay scannable") {
+  test("sweepTransient frees every owned barrier block") {
     import graft.util.Barriers
     import org.apache.spark.storage.StorageLevel
     val a = spark.range(100).toDF("n")
     val transient0 = Barriers.barrier(a.select(($"n" * 2).as("m")))
-    val pinned = Barriers.pin(
-      Barriers.barrier(a.select(($"n" + 1).as("p"))))
     val freed = Barriers.sweepTransient(spark.sparkContext)
     assert(freed >= 1, "sweep freed nothing")
     def level(df: org.apache.spark.sql.DataFrame) =
@@ -117,13 +114,40 @@ class BarrierSpec extends SparkSpec {
         .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
         .rdd.getStorageLevel
     assert(level(transient0) === StorageLevel.NONE,
-      "unpinned barrier blocks survived the sweep")
-    assert(level(pinned) !== StorageLevel.NONE,
-      "pinned blocks were swept")
-    assert(pinned.count() === 100,
-      "pinned frame not scannable after sweep")
+      "barrier blocks survived the sweep")
     // swept ids leave the registry: a second sweep is a no-op
     assert(Barriers.sweepTransient(spark.sparkContext) === 0)
+  }
+
+  test("DiskCache fingerprints name, size and mtime: a size change " +
+      "rebuilds, a same-size rewrite with the mtime kept does not") {
+    import java.nio.file.{Files, Paths}
+    import graft.util.DiskCache
+    val kind = "testcache-fp-" + System.nanoTime()
+    val src = Files.createTempDirectory("graft-dc-fpsrc")
+    val f = src.resolve("x.txt")
+    Files.writeString(f, "hello")
+    var builds = 0
+    def serve(s: org.apache.spark.sql.SparkSession): String =
+      DiskCache.cached(s, kind, "v1", Seq(src.toString), "t", Seq("sub")) {
+        tmp =>
+          builds += 1
+          Seq(Files.readString(f)).toDF("s").write.parquet(tmp + "/sub")
+      } { base => s.read.parquet(base + "/sub").head().getString(0) }
+    assert(serve(spark) === "hello" && builds === 1)
+    val fp0 = DiskCache.fingerprint(Seq(src.toString))
+    // a rewrite that changes the size: new fingerprint, rebuilt entry
+    Files.writeString(f, "hello, world")
+    val fp1 = DiskCache.fingerprint(Seq(src.toString))
+    assert(fp1 !== fp0)
+    assert(serve(spark) === "hello, world" && builds === 2)
+    // the documented limit: same size, mtime restored → same
+    // fingerprint, and a fresh session is served the old entry
+    val mtime = Files.getLastModifiedTime(f)
+    Files.writeString(f, "HELLO, WORLD")
+    Files.setLastModifiedTime(f, mtime)
+    assert(DiskCache.fingerprint(Seq(src.toString)) === fp1)
+    assert(serve(spark.newSession()) === "hello, world" && builds === 2)
   }
 
   test("DiskCache params key entries mechanically and a tampered " +
