@@ -1,8 +1,10 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.util.Barriers.BarrierOps
 
 import graft.model.Tables
@@ -162,38 +164,80 @@ final class MemoryGraph(val nodes: DataFrame, val edges: DataFrame) {
 
   /** Multi-hop walk along one edge type from a start node
     * (reader.go:548 GetInvalidationChain generalized to arbitrary
-    * depth). Pointer-doubling: level k composes stride-2^k edges with
-    * themselves, so a depth-n chain needs O(log n) materialized rounds
-    * instead of n sequential joins — the difference between 9 and 133
-    * Spark jobs on the sf0.1 chains. Emits every traversed edge with
-    * its (shortest) step number, matching the recursive-CTE oracle on
-    * the (single-path) invalidates chains.
+    * depth). Emits every edge whose `src` lies at shortest distance
+    * `d < maxHops` from the start as `(step = d + 1, src, dst, prop)`,
+    * duplicates included, matching the recursive-CTE oracle on the
+    * (single-path) invalidates chains. An edge with a null `src` is
+    * never emitted; one with a null `dst` is emitted when its `src` is
+    * reached, and the null is never expanded (the join semantics).
     *
-    * `edgeFilter` restricts the edge relation BEFORE doubling — the
-    * doubling composes strides for every node in the relation, so a
+    * `edgeFilter` restricts the edge relation before anything else: a
     * caller that knows its chains live inside a property slice (the
     * invalidation chain of an event never leaves its event_type,
     * exactly as mie's revision chain never leaves its fact lineage)
-    * should pass that slice: stride joins then touch one chain
-    * family, not the whole edge type. Restricting to the *reached*
-    * set instead would be wrong — doubling needs strides from nodes
-    * ahead of the frontier. */
+    * should pass that slice.
+    *
+    * The physical shape is chosen from the size of that sliced stride
+    * relation, read once as `limit(WalkDriverCap + 1)`, one SQL
+    * execution:
+    *   - at most `WalkDriverCap` rows: a BFS on the driver that stops
+    *     at `maxHops`, returned as a local relation;
+    *   - above it: pointer doubling ([[walkByDoubling]]) from a barrier
+    *     of the same relation.
+    * The cap's measurement is on `MemoryGraph.WalkDriverCap`. */
   def walk(startId: String, etype: String, maxHops: Int,
-           edgeFilter: Option[Column] = None,
-           nodeSlice: Option[DataFrame] = None): DataFrame = {
+           edgeFilter: Option[Column] = None): DataFrame = {
+    val e1 = strideRelation(etype, edgeFilter)
+    val head = e1.limit(MemoryGraph.WalkDriverCap + 1).collect()
+    if (head.length <= MemoryGraph.WalkDriverCap)
+      walkOnDriver(head, e1.schema, startId, maxHops)
+    else doubling(e1.barrier(true), startId, maxHops)
+  }
+
+  /** [[walk]]'s shape above its driver cap, callable at any slice size.
+    * Pointer doubling: level k composes stride-2^k edges with
+    * themselves, so a depth-n chain needs O(log n) materialized rounds
+    * instead of n sequential joins; each level runs an eager barrier, a
+    * count and a stride self-join barrier. The doubling composes
+    * strides for every node in the relation: restricting it to the
+    * *reached* set instead would be wrong, since doubling needs strides
+    * from nodes ahead of the frontier. */
+  private[graft] def walkByDoubling(startId: String, etype: String,
+      maxHops: Int, edgeFilter: Option[Column] = None): DataFrame =
+    doubling(strideRelation(etype, edgeFilter).barrier(true), startId,
+      maxHops)
+
+  private def strideRelation(etype: String,
+                             edgeFilter: Option[Column]): DataFrame =
+    edgeFilter.foldLeft(edges.where(col("etype") === etype))(_ where _)
+      .select(col("src"), col("dst"), col("prop"))
+
+  private def walkOnDriver(rows: Array[Row], schema: StructType,
+                           startId: String, maxHops: Int): DataFrame = {
+    val out = rows.filterNot(_.isNullAt(0)).groupBy(_.get(0))
+    val dist = scala.collection.mutable.HashMap[Any, Int](startId -> 0)
+    var frontier: Seq[Any] = Seq(startId)
+    var d = 0
+    // only nodes at distance < maxHops emit edges, so expand no further
+    while (frontier.nonEmpty && d + 1 < maxHops) {
+      d += 1
+      frontier = frontier.flatMap(u => out.getOrElse(u, Array.empty[Row]))
+        .filterNot(_.isNullAt(1)).map(_.get(1)).distinct
+        .filterNot(dist.contains)
+      dist ++= frontier.map(_ -> d)
+    }
+    val walked = rows.iterator.filterNot(_.isNullAt(0))
+      .flatMap(r => dist.get(r.get(0)).filter(_ < maxHops)
+        .map(k => Row(k + 1, r.get(0), r.get(1), r.get(2))))
+      .toSeq
+    nodes.sparkSession.createDataFrame(walked.asJava,
+      StructType(StructField("step", IntegerType, nullable = false) +:
+        schema.fields))
+  }
+
+  private def doubling(e1: DataFrame, startId: String,
+                       maxHops: Int): DataFrame = {
     val spark = nodes.sparkSession
-    // `nodeSlice` (single `node` column) semi-joins the stride
-    // relation down BEFORE doubling — the sound slice is any superset
-    // of the start's weakly-connected component (a walk can never
-    // leave it), e.g. [[MemoryGraph.componentView]] filtered to the
-    // start's component. Only src needs the semi-join: both endpoints
-    // of a component's edge are in the component.
-    val sliced = edgeFilter
-      .foldLeft(edges.where(col("etype") === etype))(_ where _)
-    val e1 = nodeSlice.foldLeft(sliced)((df, ns) =>
-        df.join(ns.select(col("node").as("__slice_node")),
-          col("src") === col("__slice_node"), "left_semi"))
-      .select(col("src"), col("dst"), col("prop")).barrier(true)
     var dist = spark.range(1)
       .select(lit(startId).as("node"), lit(0L).as("d"))
     var stride = e1.select(col("src").as("s"), col("dst").as("t"),
@@ -345,6 +389,15 @@ object MemoryGraph {
     * read back. */
   private val CacheVersion = "v3"
 
+  /** The largest stride relation [[MemoryGraph.walk]] walks on the
+    * driver; above it, pointer doubling. Measured on 4 cores (CHANGES.md
+    * has the table): the driver BFS beats doubling from 3.6k rows
+    * (0.14 s vs 1.1 s) to 2.25M (2.7 s vs 3.6 s), and the read holds
+    * about 210 bytes a row on the driver (157 MB at 750k rows). 200k
+    * rows keeps that near 40 MB, and bounds the read a slice over the
+    * cap wastes before it falls back to doubling. */
+  private val WalkDriverCap = 200000
+
   /** The parquet tables [[fromTables]] derives the graph from. */
   private val SourceTables = Seq("customer", "supplier", "part", "orders",
     "lineitem", "documents", "events")
@@ -395,24 +448,6 @@ object MemoryGraph {
       graft.graph.GraphAlgo.undirectedSimple(persisted(s, dir).edges)
         .write.mode("overwrite").parquet(s"$tmp/und")
     } { base => s.read.parquet(s"$base/und") }
-
-  /** Per-etype connected-component map (node, component) of the
-    * persisted graph, persisted alongside the graph layout the way
-    * the undirected view is (DiskCache, corpus-fingerprint keyed):
-    * [[MemoryGraph.walk]] prunes its stride relation to the start's
-    * component through it — a multi-hop traversal can never leave its
-    * weakly-connected component, so the stride self-composition runs
-    * over one component's edges instead of the whole edge type (the
-    * last super-linear term in the graph family; SURVEY §6 backlog). */
-  def componentView(s: SparkSession, dir: String,
-                    etype: String): org.apache.spark.sql.DataFrame =
-    graft.util.DiskCache.cached(s, "graph-cc", CacheVersion,
-      Seq(dir), s"cc-$etype", Seq("cc")) { tmp =>
-      graft.graph.GraphAlgo.connectedComponents(
-        persisted(s, dir).edges.where(col("etype") === etype)
-          .select(col("src"), col("dst")))
-        .write.mode("overwrite").parquet(s"$tmp/cc")
-    } { base => s.read.parquet(s"$base/cc") }
 
   /** Bind the memory graph to the driver-generated tables:
     * fact≈documents, decision≈orders, entity≈customer∪supplier∪part,

@@ -105,20 +105,8 @@ object GraphSuite extends Suite {
       val startId = Tables.events(s, d)
         .where(col("user_id") === 7 && col("event_type") === "view")
         .agg(max(col("event_id"))).first().getLong(0)
-      // stride relation pruned to the START'S COMPONENT via the
-      // persisted per-etype CC view (a walk can never leave its
-      // weakly-connected component): the doubling then composes one
-      // chain's edges, not the whole edge type's. The event_type
-      // slice stays as the cheap scan-level pre-filter.
-      val comp = MemoryGraph.componentView(s, d, "invalidates")
-      val slice = comp.join(
-          comp.where(col("node") === s"evt:$startId")
-            .select(col("component").as("c0")),
-          col("component") === col("c0"))
-        .select(col("node"))
       g.walk(s"evt:$startId", "invalidates", maxHops = 200,
-          edgeFilter = Some(col("prop") === "view"),
-          nodeSlice = Some(slice))
+          edgeFilter = Some(col("prop") === "view"))
         .orderBy(col("step"))
     },
     Some("""

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.graph.MemoryGraph
 import graft.model.Tables
@@ -40,25 +41,24 @@ class GraphSpec extends SparkSpec {
     assert(truncated.agg(max($"step")).as[Int].head() === 4)
   }
 
-  test("walk pruned to the start's component equals the unpruned walk") {
+  test("walk from a node with no edges is empty") {
+    assert(g.walk("fact:0", "invalidates", 5).isEmpty)
+  }
+
+  test("walk at maxHops = 0 and from a start whose slice is empty returns the doubling shape's rows") {
     val start = Tables.events(spark, sf)
       .where($"user_id" === 7 && $"event_type" === "view")
       .agg(max($"event_id")).as[Long].head()
-    val comp = MemoryGraph.componentView(spark, sf, "invalidates")
-    val slice = comp.join(
-        comp.where($"node" === s"evt:$start").select($"component".as("c0")),
-        $"component" === $"c0")
-      .select($"node")
-    val pruned = g.walk(s"evt:$start", "invalidates", 200,
-        nodeSlice = Some(slice))
-      .orderBy($"step").collect().toSeq
-    val full = g.walk(s"evt:$start", "invalidates", 200)
-      .orderBy($"step").collect().toSeq
-    assert(pruned.nonEmpty && pruned === full)
-  }
-
-  test("walk from a node with no edges is empty") {
-    assert(g.walk("fact:0", "invalidates", 5).isEmpty)
+    def both(maxHops: Int, filter: Option[Column]) =
+      (g.walk(s"evt:$start", "invalidates", maxHops, edgeFilter = filter),
+        g.walkByDoubling(s"evt:$start", "invalidates", maxHops,
+          edgeFilter = filter))
+    val (w0, d0) = both(0, None)
+    assert(w0.isEmpty && d0.isEmpty)
+    val (wEmpty, dEmpty) = both(5, Some($"prop" === "no-such-event-type"))
+    assert(wEmpty.isEmpty && dEmpty.isEmpty)
+    val (w, d) = both(5, Some($"prop" === "view"))
+    assert(w.count() === 5 && w.exceptAll(d).isEmpty && d.exceptAll(w).isEmpty)
   }
 
   test("findByName is case-insensitive and returns one row") {

@@ -6,13 +6,17 @@ import org.scalacheck.rng.Seed
 import graft.graph.MemoryGraph
 import graft.WalkPropertySpec.WalkCase
 
-/** Property check of [[MemoryGraph.walk]] against a plain driver-side
-  * BFS: on generated edge lists of at most 12 nodes — chains, branching
-  * DAGs, cycles, self-loops, parallel edges and starts with no
-  * out-edges — `walk` must emit exactly the edges whose `src` lies at
-  * shortest distance `d < maxHops` from the start, each with
-  * `step = d + 1`, duplicates included. Edges of a second type ride
-  * along to check the type filter. Runs under both barrier modes.
+/** Property check of [[MemoryGraph.walk]] and of its pointer-doubling
+  * shape ([[MemoryGraph.walkByDoubling]], which `walk` takes only above
+  * its driver cap) against a plain driver-side BFS: on generated edge
+  * lists of at most 12 nodes — chains, branching DAGs, cycles,
+  * self-loops, parallel edges and starts with no out-edges — both must
+  * emit exactly the edges whose `src` lies at shortest distance
+  * `d < maxHops` from the start, each with `step = d + 1`, duplicates
+  * included. Rows of the walked type with a null `src` (never emitted)
+  * or a null `dst` (emitted when the `src` is reached, never expanded)
+  * and edges of a second type ride along. Runs under both barrier
+  * modes.
   */
 class WalkPropertySpec extends SparkSpec {
   import spark.implicits._
@@ -49,19 +53,31 @@ class WalkPropertySpec extends SparkSpec {
       es <- Gen.listOfN(m, Gen.zip(Gen.choose(0, n - 1), Gen.choose(0, n - 1)))
     } yield ("random", n, es))
 
+  // rows of the walked type with one endpoint null
+  private def dangling(n: Int): Gen[Seq[(Option[Int], Option[Int], String)]] =
+    Gen.choose(0, 2).flatMap(Gen.listOfN(_, for {
+      a <- Gen.choose(0, n - 1); srcNull <- Gen.oneOf(true, false)
+    } yield if (srcNull) (None, Some(a), "a") else (Some(a), None, "a")))
+
   // start == n names a node no edge touches
   private val cases: Gen[WalkCase] = for {
     (shape, n, es) <- shapes
     edges <- props(es)
+    nulls <- dangling(n)
     noise <- Gen.listOfN(n, Gen.zip(Gen.choose(0, n - 1), Gen.choose(0, n - 1)))
     start <- Gen.choose(0, n)
     maxHops <- Gen.oneOf(Hops)
-  } yield WalkCase(shape, n, edges, noise, start, maxHops)
+  } yield WalkCase(shape, n,
+    edges.map { case (a, b, p) => (Some(a), Some(b), p) } ++ nulls,
+    noise, start, maxHops)
+
+  private type Walked = Seq[(Int, String, Option[String], String)]
 
   private def id(i: Int) = s"n$i"
 
-  private def bfs(c: WalkCase): Seq[(Int, String, String, String)] = {
-    val out = c.edges.groupBy(_._1)
+  private def bfs(c: WalkCase): Walked = {
+    val out = c.edges.collect { case (Some(a), Some(b), _) => (a, b) }
+      .groupBy(_._1)
     var dist = Map(c.start -> 0)
     var frontier = Seq(c.start)
     var d = 0
@@ -71,33 +87,42 @@ class WalkPropertySpec extends SparkSpec {
         .distinct.filterNot(dist.contains)
       dist ++= frontier.map(_ -> d)
     }
-    c.edges.collect { case (a, b, p) if dist.get(a).exists(_ < c.maxHops) =>
-      (dist(a) + 1, id(a), id(b), p)
+    c.edges.collect {
+      case (Some(a), b, p) if dist.get(a).exists(_ < c.maxHops) =>
+        (dist(a) + 1, id(a), b.map(id), p)
     }.sorted
   }
 
-  private def walked(c: WalkCase): Seq[(Int, String, String, String)] = {
-    val edges = (c.edges.map { case (a, b, p) => ("rel", id(a), id(b), p) } ++
-      c.noise.map { case (a, b) => ("other", id(b), id(a), "x") })
+  private def walked(c: WalkCase): (Walked, Walked) = {
+    val edges = (c.edges.map { case (a, b, p) =>
+        ("rel", a.map(id), b.map(id), p) } ++
+      c.noise.map { case (a, b) => ("other", Some(id(b)), Some(id(a)), "x") })
       .toDF("etype", "src", "dst", "prop")
     val nodes = (0 to c.n).map(i => (id(i), "entity", "", "", 0.0))
       .toDF("id", "ntype", "content", "attr", "score")
-    new MemoryGraph(nodes, edges).walk(id(c.start), "rel", c.maxHops)
-      .as[(Int, String, String, String)].collect().toSeq.sorted
+    val g = new MemoryGraph(nodes, edges)
+    def rows(df: org.apache.spark.sql.DataFrame): Walked =
+      df.as[(Int, String, Option[String], String)].collect().toSeq.sorted
+    (rows(g.walk(id(c.start), "rel", c.maxHops)),
+      rows(g.walkByDoubling(id(c.start), "rel", c.maxHops)))
   }
 
   private def check(): Unit = {
     val seen = scala.collection.mutable.Set.empty[(String, Int)]
+    var nullDstEmitted = 0
     val prop = Prop.forAllNoShrink(cases) { c =>
       seen += c.shape -> c.maxHops
-      val (got, want) = (walked(c), bfs(c))
-      (got == want) :| s"$c\n  walk: $got\n  bfs:  $want"
+      val ((got, doubled), want) = (walked(c), bfs(c))
+      nullDstEmitted += want.count(_._3.isEmpty)
+      (got == want && doubled == want) :|
+        s"$c\n  walk:     $got\n  doubling: $doubled\n  bfs:      $want"
     }
     val res = Test.check(Test.Parameters.default
       .withMinSuccessfulTests(40).withInitialSeed(Seed(20261019L)), prop)
     assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
     assert(seen.map(_._1).size === 5 && seen.map(_._2) === Hops.toSet,
       s"generator missed a shape or a maxHops value: $seen")
+    assert(nullDstEmitted > 0, "no case reached a row with a null dst")
   }
 
   test("walk equals a driver-side BFS on generated edge lists") {
@@ -115,7 +140,7 @@ class WalkPropertySpec extends SparkSpec {
 
 object WalkPropertySpec {
   final case class WalkCase(shape: String, n: Int,
-                            edges: Seq[(Int, Int, String)],
+                            edges: Seq[(Option[Int], Option[Int], String)],
                             noise: Seq[(Int, Int)],
                             start: Int, maxHops: Int)
 }

@@ -30,6 +30,24 @@ class WriterIOSpec extends SparkSpec {
     assert(g2.walk("fact:999998", "invalidates", 5).count() === 1)
   }
 
+  test("walk on an amended snapshot returns the doubling shape's rows") {
+    val g2 = g
+      .store("fact:999996", "fact", "first correction", "en", 1.0)
+      .store("fact:999997", "fact", "second correction", "en", 1.0)
+      .invalidate("fact:0", "fact:999996", "superseded")
+      .invalidate("fact:999996", "fact:999997", "superseded again")
+      .addEdge("invalidates", "fact:0", "fact:1", "older")
+    val walked = g2.walk("fact:999997", "invalidates", 5)
+      .orderBy($"step").as[(Int, String, String, String)].collect().toSeq
+    assert(walked === Seq(
+      (1, "fact:999997", "fact:999996", "superseded again"),
+      (2, "fact:999996", "fact:0", "superseded"),
+      (3, "fact:0", "fact:1", "older")))
+    val doubled = g2.walkByDoubling("fact:999997", "invalidates", 5)
+      .orderBy($"step").as[(Int, String, String, String)].collect().toSeq
+    assert(doubled === walked)
+  }
+
   test("updateAttr rewrites exactly one node's attr") {
     val g2 = g.updateAttr("dec:0", "reversed")
     assert(g2.node("dec:0").select($"attr").as[String].head() === "reversed")
