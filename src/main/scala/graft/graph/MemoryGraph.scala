@@ -30,8 +30,58 @@ import graft.model.Tables
   * At cluster scale `nodes`/`edges` would be bucketed by id/src so
   * traversal joins co-locate; point lookups prune on the id-prefix
   * partition (ntype) first.
+  *
+  * A graph is its base frames plus a driver-side [[MemoryGraph.Delta]]
+  * of snapshot writes (see the writer surface below); `baseValid` is
+  * the base's valid view, read from the stored `valid` flag on the
+  * persisted layout and derived by an anti join for a graph built from
+  * frames.
   */
-final class MemoryGraph(val nodes: DataFrame, val edges: DataFrame) {
+final class MemoryGraph private (baseNodes: DataFrame, baseEdges: DataFrame,
+    baseValid: DataFrame, delta: MemoryGraph.Delta) {
+
+  /** A graph over node and edge frames with no pending writes. A node
+    * is valid iff no `invalidates` edge of `edges` points at it. */
+  def this(nodes: DataFrame, edges: DataFrame) =
+    this(nodes, edges, MemoryGraph.notInvalidated(nodes, edges),
+      MemoryGraph.Delta.empty)
+
+  /** The nodes: the base with the delta's attr overrides applied as one
+    * projection, unioned with one local relation of the delta's rows —
+    * the same plan shape after one write or after a thousand. */
+  lazy val nodes: DataFrame =
+    if (delta.isEmpty) baseNodes
+    else withOverrides(baseNodes).unionAll(local(delta.nodes, baseNodes))
+
+  /** The edges: the base unioned with one local relation of the delta's. */
+  lazy val edges: DataFrame =
+    if (delta.isEmpty) baseEdges
+    else baseEdges.unionAll(local(delta.edges, baseEdges))
+
+  /** The `valid = true` view the reference folds into every listing
+    * query (reader.go:240-259): the base's valid rows unioned with the
+    * delta's nodes, minus the ids the delta's `invalidates` edges
+    * target, as one `isin` filter — no join against the edges. A null
+    * id stays valid, as it does under the anti join. */
+  private lazy val validView: DataFrame =
+    if (delta.isEmpty) baseValid
+    else withOverrides(baseValid).unionAll(local(delta.nodes, baseNodes))
+      .where(col("id").isNull || !col("id").isin(delta.invalidated.toSeq: _*))
+
+  private def withOverrides(df: DataFrame): DataFrame = {
+    val o = delta.overrides
+    val attr = if (o.isEmpty) col("attr")
+      else when(col("id").isin(o.keys.toSeq: _*),
+        element_at(typedLit(o), col("id"))).otherwise(col("attr"))
+    df.select(col("id"), col("ntype"), col("content"), attr.as("attr"),
+      col("score"))
+  }
+
+  /** `rows` as one local relation with `like`'s schema, every field
+    * nullable (a written field may be null where the base's is not). */
+  private def local(rows: Vector[Row], like: DataFrame): DataFrame =
+    like.sparkSession.createDataFrame(rows.asJava,
+      StructType(like.schema.fields.map(_.copy(nullable = true))))
 
   /** GetNodeByID with prefix dispatch
     * (reader.go:309 GetNodeByID): the ntype filter prunes before the
@@ -53,9 +103,9 @@ final class MemoryGraph(val nodes: DataFrame, val edges: DataFrame) {
     * reference's second scan, joined in as a broadcast scalar. */
   def list(ntype: String, attrEq: Option[String], sortBy: Column,
            limit: Int, offset: Int, validOnly: Boolean = false): DataFrame = {
-    val filtered = attrEq.foldLeft(nodes.where(col("ntype") === ntype))(
+    val base = attrEq.foldLeft(
+      (if (validOnly) validView else nodes).where(col("ntype") === ntype))(
       (df, a) => df.where(col("attr") === a))
-    val base = if (validOnly) notInvalidated(filtered) else filtered
     val total = broadcast(base.agg(count(lit(1)).as("total_count")))
     val page = base.orderBy(sortBy, col("id")).limit(offset + limit)
     // rank only the k-row page; ntype is constant under the filter, so
@@ -113,9 +163,12 @@ final class MemoryGraph(val nodes: DataFrame, val edges: DataFrame) {
 
   /** Batch ingestion (batcher.go:19-188 / bulk_store.go): append a
     * whole DataFrame of nodes and/or edges in ONE union each — the
-    * plan grows by one branch per BATCH, not per row, and at cluster
-    * scale the batch is an appended partition compacted on write-out.
-    * Columns are aligned by name to the graph schema. */
+    * plan grows by one branch per BATCH, not per row. Columns are
+    * aligned by name to the graph schema. The result is a graph built
+    * from frames: the current delta is folded into its base, and its
+    * validity is derived by the anti join against all its
+    * `invalidates` edges, so a stored node that a base edge
+    * invalidates is invalid again (see [[store]]). */
   def storeAll(newNodes: DataFrame, newEdges: DataFrame): MemoryGraph = {
     val n = if (newNodes == null) nodes else nodes.unionAll(
       newNodes.select(col("id"), col("ntype"), col("content"), col("attr"),
@@ -230,14 +283,14 @@ final class MemoryGraph(val nodes: DataFrame, val edges: DataFrame) {
       .flatMap(r => dist.get(r.get(0)).filter(_ < maxHops)
         .map(k => Row(k + 1, r.get(0), r.get(1), r.get(2))))
       .toSeq
-    nodes.sparkSession.createDataFrame(walked.asJava,
+    baseNodes.sparkSession.createDataFrame(walked.asJava,
       StructType(StructField("step", IntegerType, nullable = false) +:
         schema.fields))
   }
 
   private def doubling(e1: DataFrame, startId: String,
                        maxHops: Int): DataFrame = {
-    val spark = nodes.sparkSession
+    val spark = baseNodes.sparkSession
     var dist = spark.range(1)
       .select(lit(startId).as("node"), lit(0L).as("d"))
     var stride = e1.select(col("src").as("s"), col("dst").as("t"),
@@ -301,54 +354,52 @@ final class MemoryGraph(val nodes: DataFrame, val edges: DataFrame) {
   // mie's writer (writer.go:35 StoreFact … :230 InvalidateFact, :264
   // AddRelationship, :365 UpdateStatus) mutates CozoDB in place; the
   // Spark-native shape is snapshot semantics: every write returns a new
-  // MemoryGraph over an amended plan. At scale the amendments are
-  // appended partitions, compacted on write-out.
+  // MemoryGraph whose delta is the old one plus the write. A write
+  // builds no plan; the readers see the delta through `nodes`, `edges`
+  // and the valid view, whose plans are the same size whatever the
+  // number of writes. Bulk input goes through [[storeAll]].
 
-  private def one(row: (String, String, String, String, Double)): DataFrame =
-    nodes.sparkSession.range(1).select(
-      lit(row._1).as("id"), lit(row._2).as("ntype"), lit(row._3).as("content"),
-      lit(row._4).as("attr"), lit(row._5).as("score"))
-
-  /** StoreX (writer.go:35-229): append a typed node. */
+  /** StoreX (writer.go:35-229): append a typed node. Like mie's
+    * writer, which sets `valid` on the node it stores, the stored row
+    * is valid until an `invalidates` edge of a later write targets it,
+    * even when a base edge already targets its id. */
   def store(id: String, ntype: String, content: String, attr: String,
             score: Double): MemoryGraph =
-    new MemoryGraph(nodes.unionAll(one((id, ntype, content, attr, score))), edges)
+    amend(delta.copy(nodes = delta.nodes :+ Row(id, ntype, content, attr, score)))
 
   /** AddRelationship (writer.go:264): append an edge. */
   def addEdge(etype: String, src: String, dst: String, prop: String): MemoryGraph =
-    new MemoryGraph(nodes, edges.unionAll(
-      nodes.sparkSession.range(1).select(lit(etype).as("etype"),
-        lit(src).as("src"), lit(dst).as("dst"), lit(prop).as("prop"))))
+    amend(delta.copy(edges = delta.edges :+ Row(etype, src, dst, prop),
+      invalidated =
+        if (etype == "invalidates" && dst != null) delta.invalidated + dst
+        else delta.invalidated))
 
   /** InvalidateFact (writer.go:230): the new fact invalidates the old
-    * one. Validity is derived, not stored: a fact is invalid iff an
-    * `invalidates` edge points at it (see [[validNodes]]) — no
-    * in-place `valid` flip needed. */
+    * one — an `invalidates` edge, whose target the valid view drops
+    * (see [[validNodes]]). */
   def invalidate(oldId: String, newId: String, reason: String): MemoryGraph =
     addEdge("invalidates", newId, oldId, reason)
 
-  /** UpdateStatus/UpdateDescription (writer.go:313,365): rewrite one
-    * node's attr (status/kind/category slot). */
+  /** UpdateStatus/UpdateDescription (writer.go:313,365): rewrite the
+    * attr (status/kind/category slot) of every row with this id so
+    * far: the delta's rows on the driver, the base's through an
+    * override. A node stored later keeps its own attr. */
   def updateAttr(id: String, newAttr: String): MemoryGraph =
-    new MemoryGraph(
-      nodes.withColumn("attr",
-        when(col("id") === id, lit(newAttr)).otherwise(col("attr"))),
-      edges)
+    amend(delta.copy(
+      nodes = delta.nodes.map(r =>
+        if (r.get(0) == id) Row(r.get(0), r.get(1), r.get(2), newAttr, r.get(4))
+        else r),
+      overrides = delta.overrides + (id -> newAttr)))
 
-  /** Anti join against the invalidated set — the `valid = true`
-    * condition the reference folds into every listing query
-    * (reader.go:240-259). Broadcast-able edge side, no node shuffle. */
-  private def notInvalidated(df: DataFrame): DataFrame = {
-    val invalidated = edges.where(col("etype") === "invalidates")
-      .select(col("dst"))
-    df.join(invalidated, col("id") === col("dst"), "left_anti")
-  }
+  private def amend(d: MemoryGraph.Delta): MemoryGraph =
+    new MemoryGraph(baseNodes, baseEdges, baseValid, d)
 
-  /** Nodes of a type with no incoming `invalidates` edge — the
-    * `valid = true` view (anti join, no shuffle of the edge side
-    * needed when broadcast). */
+  /** Nodes of a type that are valid: on the persisted layout the
+    * stored `valid` flag, for a graph built from frames no incoming
+    * base `invalidates` edge; then for both, no `invalidates` edge
+    * among the snapshot's writes. */
   def validNodes(ntype: String): DataFrame =
-    notInvalidated(nodes.where(col("ntype") === ntype))
+    validView.where(col("ntype") === ntype)
 
   /** The `mie://context/recent` preflight resource
     * (cmd/mie/mcp.go:988 buildRecentContext): latest VALID facts
@@ -362,8 +413,8 @@ final class MemoryGraph(val nodes: DataFrame, val edges: DataFrame) {
   def recentContext(nFacts: Int = 5, nDecisions: Int = 3,
                     nEntities: Int = 5): DataFrame = {
     def section(ntype: String, k: Int, validOnly: Boolean): DataFrame = {
-      val base0 = nodes.where(col("ntype") === ntype)
-      val base = if (validOnly) notInvalidated(base0) else base0
+      val base = (if (validOnly) validView else nodes)
+        .where(col("ntype") === ntype)
       val num = regexp_extract(col("id"), "([0-9]+)$", 1).cast("long")
       // rank only the k-row head; partitioning by the constant ntype
       // keeps the window off the empty-partition-spec path (the
@@ -387,7 +438,26 @@ object MemoryGraph {
     * on-disk graph cache and the views derived from it are keyed by
     * this, so stale layouts from an older code version can never be
     * read back. */
-  private val CacheVersion = "v3"
+  private val CacheVersion = "v4"
+
+  /** A snapshot's writes, kept on the driver: appended node and edge
+    * rows (in the base's column order), attr overrides of base ids
+    * (last write wins), and the ids the appended `invalidates` edges
+    * target. Immutable: each write returns a new one. */
+  private[graph] final case class Delta(nodes: Vector[Row], edges: Vector[Row],
+      overrides: Map[String, String], invalidated: Set[String]) {
+    def isEmpty: Boolean = nodes.isEmpty && edges.isEmpty && overrides.isEmpty
+  }
+
+  private[graph] object Delta {
+    val empty: Delta = Delta(Vector.empty, Vector.empty, Map.empty, Set.empty)
+  }
+
+  /** `nodes` minus those an `invalidates` edge of `edges` points at:
+    * an anti join, broadcast-able on the edge side. */
+  private def notInvalidated(nodes: DataFrame, edges: DataFrame): DataFrame =
+    nodes.join(edges.where(col("etype") === "invalidates").select(col("dst")),
+      col("id") === col("dst"), "left_anti")
 
   /** The largest stride relation [[MemoryGraph.walk]] walks on the
     * driver; above it, pointer doubling. Measured on 4 cores (CHANGES.md
@@ -410,6 +480,12 @@ object MemoryGraph {
     * of re-unioning 9 table scans per query. At cluster scale this is
     * the bucketed/partitioned table the graph would live in anyway.
     *
+    * The node layout also stores each node's validity, as mie's
+    * writer does (writer.go:230): `valid` is false iff an `invalidates`
+    * edge of the graph points at the node, computed in the build from
+    * the written `invalidates` partition, so the valid view is a
+    * pushed-down filter instead of a join.
+    *
     * A [[graft.util.DiskCache]] entry fingerprinted on the seven source
     * tables, so regenerated data rebuilds it and concurrent JVMs (sbt
     * test + Bench) read either their own or the winner's full copy. */
@@ -417,20 +493,27 @@ object MemoryGraph {
     val sources = SourceTables.map(t =>
       java.nio.file.Paths.get(dir, s"$t.parquet").toAbsolutePath
         .normalize.toString)
+    def nodeCols(df: DataFrame) = df.select(col("id"), col("ntype"),
+      col("content"), col("attr"), col("score"))
     graft.util.DiskCache.cached(s, "graph-cache", CacheVersion, sources,
       dir, Seq("nodes", "edges")) { tmp =>
       val g = fromTables(s, dir)
-      g.nodes.write.mode("overwrite").partitionBy("ntype")
-        .parquet(s"$tmp/nodes")
       g.edges.write.mode("overwrite").partitionBy("etype")
         .parquet(s"$tmp/edges")
+      val invalidated = s.read.parquet(s"$tmp/edges")
+        .where(col("etype") === "invalidates")
+        .select(col("dst").as("inv")).distinct()
+      g.nodes.join(invalidated, col("id") === col("inv"), "left_outer")
+        .select(col("id"), col("ntype"), col("content"), col("attr"),
+          col("score"), col("inv").isNull.as("valid"))
+        .write.mode("overwrite").partitionBy("ntype")
+        .parquet(s"$tmp/nodes")
     } { base =>
-      new MemoryGraph(
-        s.read.parquet(s"$base/nodes")
-          .select(col("id"), col("ntype"), col("content"), col("attr"),
-            col("score")),
+      val nodes = s.read.parquet(s"$base/nodes")
+      new MemoryGraph(nodeCols(nodes),
         s.read.parquet(s"$base/edges")
-          .select(col("etype"), col("src"), col("dst"), col("prop")))
+          .select(col("etype"), col("src"), col("dst"), col("prop")),
+        nodeCols(nodes.where(col("valid"))), Delta.empty)
     }
   }
 

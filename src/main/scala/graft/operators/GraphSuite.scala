@@ -197,9 +197,9 @@ object GraphSuite extends Suite {
 
   val b11 = Q(
     "b11_valid_view",
-    // validNodes: the writer surface's derived validity — a node is
-    // valid iff no invalidates edge points at it (mie flips a stored
-    // `valid` flag, writer.go:230; here validity is an anti join).
+    // validNodes: a node is valid iff no invalidates edge points at
+    // it. Like mie's stored `valid` flag (writer.go:230), the persisted
+    // layout stores it, so this reads one pruned, filtered scan.
     // For events that means: the newest event of each (user, type).
     (s, d) => MemoryGraph.persisted(s, d)
       .validNodes("event")

@@ -54,6 +54,57 @@ class WriterIOSpec extends SparkSpec {
     assert(g2.nodes.where($"attr" === "reversed").count() === 1)
   }
 
+  test("nodes, edges and a valid page plan the same after 1 and 150 writes") {
+    val pg = MemoryGraph.persisted(spark, sf)
+    // write i is a store, an addEdge, an invalidate or an updateAttr
+    def written(n: Int) = (0 until n).foldLeft(pg) { (h, i) =>
+      val id = s"fact:w${i / 4}"
+      i % 4 match {
+        case 0 => h.store(id, "fact", s"w$i", "en", i.toDouble)
+        case 1 => h.addEdge("fact_entity", id, "ent:c:1", "")
+        case 2 => h.invalidate("fact:1", id, "superseded")
+        case _ => h.updateAttr("dec:1", s"s$i")
+      }
+    }
+    def sizes(h: MemoryGraph) = Seq(h.nodes, h.edges,
+      h.list("fact", None, $"score".desc, 10, 0, validOnly = true))
+      .map(_.queryExecution.analyzed.collect { case n => n }.size)
+    assert(sizes(written(1)) === sizes(written(150)))
+  }
+
+  test("the persisted layout's valid flag equals the anti-join derivation") {
+    val pg = MemoryGraph.persisted(spark, sf)
+    val derived = new MemoryGraph(pg.nodes, pg.edges)
+    val types = pg.nodes.select($"ntype").distinct().as[String].collect()
+    assert(types.length === 5)
+    types.foreach { t =>
+      val (stored, anti) = (pg.validNodes(t), derived.validNodes(t))
+      assert(stored.exceptAll(anti).isEmpty && anti.exceptAll(stored).isEmpty, t)
+    }
+    assert(pg.validNodes("event").count() <
+      pg.nodes.where($"ntype" === "event").count(), "no event is invalid")
+  }
+
+  test("a stored node is valid even when a base invalidates edge targets " +
+      "its id; a storeAll batch derives it from every edge") {
+    // mie's writer sets `valid` on the node it stores (writer.go:230):
+    // only an invalidates edge written after it makes it invalid
+    Seq(MemoryGraph.persisted(spark, sf), g).foreach { base =>
+      val old = base.edges.where($"etype" === "invalidates")
+        .select($"dst").as[String].orderBy($"dst").head()
+      def contents(h: MemoryGraph) = h.validNodes("event")
+        .where($"id" === old).select($"content").as[String].collect().toSeq
+      assert(contents(base).isEmpty)
+      val h = base.store(old, "event", "stored again", "x", 1.0)
+      assert(contents(h) === Seq("stored again"))
+      assert(contents(h.invalidate(old, "evt:newer", "superseded")).isEmpty)
+      val batch = base.storeAll(
+        Seq((old, "event", "stored again", "x", 1.0))
+          .toDF("id", "ntype", "content", "attr", "score"), null)
+      assert(contents(batch).isEmpty)
+    }
+  }
+
   test("JSONL export/import round-trips the graph") {
     val dir = java.nio.file.Files.createTempDirectory("graphio").toString
     GraphIO.exportJson(g, dir)
